@@ -1,4 +1,4 @@
-.PHONY: test test-full test-norename bench smoke lint
+.PHONY: test test-full test-norename bench perfbench-selftest smoke lint
 
 # the object-store semantics gate (r15): the full index / docstore /
 # IVF-PQ / compaction suites against the rename-less backend
@@ -25,6 +25,11 @@ test-full:
 # one JSON line of per-query wall times at $(or $(SPARK_GRAFT_SF_DIR),/root/testdata/sf0.1)
 bench:
 	python bench.py
+
+# the movies-catalog benchmark's output checks: each holds on real output
+# and fails on a deliberately corrupted one (perfbench/README.md)
+perfbench-selftest:
+	python3 perfbench/run.py --self-test
 
 # driver-contract smoke: entry() rows + queries()/oracle_sql() key invariant
 smoke:

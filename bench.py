@@ -269,8 +269,15 @@ def force(df) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    # the bench keeps its own 32-slot default (its detail files are keyed
+    # by it); the engine's default follows the host's CPUs
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(
         app_name="bench",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(
+            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
+        ),
         extra_conf={
             # The ContextCleaner races task-completion events against
             # accumulator GC when queries are dropped back-to-back,
@@ -336,7 +343,6 @@ def main() -> None:
     # (n_common: 0, r15 verdict what's-wrong #4). The per-cpus file
     # survives the second run, so per-query round-over-round comparison
     # stays possible from the committed artifacts.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     detail_file_c = os.path.join(here, f"bench_detail_c{cpus}.json")
     with open(detail_file_c, "w") as fh:
         json.dump(detail, fh, indent=1)

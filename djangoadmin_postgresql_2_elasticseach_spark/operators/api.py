@@ -86,7 +86,14 @@ def film_listing(
 
 def paginate(listing: DataFrame, page: int = 1, page_size: int = 50) -> dict:
     """Pagination envelope (reference views.py:66-83): one count() pass +
-    one page slice. Returns {count, total_pages, prev, next, results}."""
+    one page slice. Returns {count, total_pages, prev, next, results}.
+
+    The count stays a pass of its own, unlike the DSL's `hits.total`
+    observation (search/dsl.py:_respond): the page is a plain offset +
+    limit over an already-sorted listing, which Spark runs partition by
+    partition and stops once it holds the page's rows, so a count
+    observed under it sees only what the page read (650 of 999 films,
+    in a trial). The page number clamp needs the count first anyway."""
     count = listing.count()
     total_pages = max(1, math.ceil(count / page_size))
     page = max(1, min(page, total_pages))

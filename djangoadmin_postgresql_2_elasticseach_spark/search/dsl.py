@@ -24,7 +24,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .query import analyze_query, field_tokens, multi_match_fuzzy
+from .query import analyze_query, field_tokens, multi_match_scores
 from ..functions.text import analyze
 
 DEFAULT_SIZE = 10
@@ -91,11 +91,12 @@ def _apply_query(docs: DataFrame, q: dict, id_col: str) -> tuple[DataFrame, bool
     if "multi_match" in q:
         mm = q["multi_match"]
         fields = [(f, 1.0) for f in mm["fields"]]
-        # no fuzziness → max_edits=0 → multi_match_fuzzy skips the fuzzy
-        # term entirely, so exact-only semantics are real (a doc with
-        # zero exact token hits cannot score)
-        scored = multi_match_fuzzy(
-            docs, mm["query"], fields, id_col=id_col, k=1_000_000,
+        # no fuzziness → max_edits=0 → the scorer skips the fuzzy term
+        # entirely, so exact-only semantics are real (a doc with zero
+        # exact token hits cannot score). Unsorted: `_respond` ranks the
+        # page, so ranking every hit here too was a second sort
+        scored = multi_match_scores(
+            docs, mm["query"], fields,
             max_edits=1 if mm.get("fuzziness") else 0,
         )
         return scored, True
@@ -387,21 +388,39 @@ def search(docs: DataFrame, body: dict, id_col: str = "id") -> dict:
 def _respond(frame: DataFrame, scored: bool, body: dict, id_col: str) -> dict:
     """The response-building tail shared by the corpus-scan `search`
     and the index-served `search_indexed`: total count, collapse,
-    search_after keyset, sort/from/size page, aggregations."""
-    from pyspark.sql import Window
+    search_after keyset, sort/from/size page, aggregations.
 
-    total = frame.count()
+    `hits.total` and the page come from ONE Spark action: a `count(1)`
+    observation sits on ``frame`` below the collapse window, the
+    search_after filter and the sort, and the page's collect reports
+    it. The count is exact only because every operator above the
+    observation reads all of its input — the top-k sort (with or
+    without `from`) and the collapse window do. Never observe above a
+    plain limit over an already-sorted frame: that limit stops reading
+    early and the count comes out short. The top-k is such a limit when
+    ``frame`` already arrives in page order within its partitions, so
+    the page sorts by one more key that no input can be sorted by.
+    `size: 0` has no page and counts directly. When the optimizer
+    proves the page empty (an all-stopword match under `from` or
+    `collapse`, a search_after cursor holding a null) it drops the
+    subtree, observation included, and no page job runs; the total is
+    then counted."""
+    from pyspark.sql import Observation, Window
+
     size = body.get("size", DEFAULT_SIZE)
 
     offset = body.get("from", 0)
 
     hits = []
-    if size:
+    if not size:
+        total = frame.count()
+    else:
         keys = _sort_keys(body, scored, id_col)
         exprs = [
             F.col(f).desc() if d == "desc" else F.col(f).asc() for f, d in keys
         ]
-        page = frame
+        obs = Observation()
+        page = frame.observe(obs, F.count(F.lit(1)).alias("total"))
         if body.get("collapse"):
             cfield = body["collapse"]["field"]
             w = Window.partitionBy(cfield).orderBy(*exprs)
@@ -412,10 +431,20 @@ def _respond(frame: DataFrame, scored: bool, body: dict, id_col: str) -> dict:
             )
         if body.get("search_after"):
             page = page.filter(_after_predicate(keys, body["search_after"]))
-        page = page.orderBy(*exprs)
+        # a trailing key no input can be sorted by: a frame already in
+        # page order within its partitions (a sort-merge join on the id,
+        # a range scan) would let the top-k take only `from + size` rows
+        # a partition. The unique id tiebreak before it means it never
+        # decides an order.
+        page = page.orderBy(*exprs, F.spark_partition_id())
         if offset:
             page = page.offset(offset)
-        for r in page.limit(size).collect():
+        rows = page.limit(size).collect()
+        # a dropped observation reports an empty row (PySpark's
+        # `obs.get` fails on it), so read the JVM row itself
+        got = obs._jo.getRow()
+        total = got.getLong(0) if got.length() else frame.count()
+        for r in rows:
             d = r.asDict(recursive=True)
             sort_vals = [d[f] for f, _ in keys]
             score = d.pop("score", None)
@@ -486,7 +515,7 @@ def _index_candidates(
     - candidate-SUPERSET servable (multi_match — scoring must re-run):
       (superset, the leaf itself) — the residual rescopes/rescores over
       the pruned payload rows, which is exact because
-      multi_match_fuzzy's score is per-doc local (no corpus stats);
+      multi_match_scores' score is per-doc local (no corpus stats);
     - not servable (term/range/exists/prefix/wildcard on keyword or
       numeric columns, nested, ids, match_all): (None, the leaf) — it
       runs as a plain predicate over the already-pruned payload frame.
@@ -724,7 +753,13 @@ def search_indexed(
     runs down both paths), but full-text clauses resolve to bucket-
     pruned posting probes and the corpus payload is only read for the
     candidate set. Scoring clauses (multi_match) re-score over the
-    pruned rows — exact, because the DSL scorer is per-doc local."""
+    pruned rows — exact, because the DSL scorer is per-doc local.
+
+    One Spark action serves the response: the candidate probe, the
+    semi-join and the docstore read run once, and `hits.total` is a
+    count observed on the matched frame under the page's top-k sort
+    (see `_respond`). That count is exact because it is observed below
+    an operator that reads every row, never above a plain limit."""
     frame, scored = search_frame_indexed(
         spark, docs, body.get("query"), index_path, id_col
     )

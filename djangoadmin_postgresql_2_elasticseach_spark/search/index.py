@@ -765,13 +765,15 @@ def _posting_partials(
         dl_at_source = with_dl and col is not None
         # spread is KEYED BY doc_id (not round-robin): every row of a
         # doc lands in one partition, so the (doc_id, token) tf
-        # aggregation below — and the doclens dedup derived from it —
-        # are satisfied by this one slim pre-explode exchange and plan
+        # aggregation below — and the in-plan dl window — are
+        # satisfied by this one slim pre-explode exchange and plan
         # with NO exchange of their own. The exploded posting stream
         # (the batch's heaviest intermediate, ~dl rows per doc) never
-        # crosses the network; ~2 AQE shuffle jobs per tick gone. At
-        # scale spread() is a no-op and the agg inserts its usual
-        # exchange — local fixed cost is what this removes.
+        # crosses the network. The batch localCheckpoint below erases
+        # this partitioning, so the doclens dedup downstream shuffles
+        # again (the exchange w_doclens relies on). At scale spread()
+        # is a no-op and the agg inserts its usual exchange — local
+        # fixed cost is what this removes.
         if col is not None:
             toks = spread(docs.select(id_col, col), [id_col]).select(
                 F.col(id_col).alias("doc_id"),
@@ -990,10 +992,10 @@ def _write_posting_batch(
         if char_fields:
             src = src.filter(F.col("field").isin(list(char_fields)))
         # one exchange: the distinct's own shuffle (AQE-coalesced to ~1
-        # partition for a vocab-delta batch); grams explode AFTER the
-        # dedup so only slim tokens cross the exchange, and the local
-        # sort by the partition columns replaces the r15 second
-        # repartition shuffle (3 AQE jobs → 2)
+        # partition for a vocab-delta batch) now also bounds writers
+        # and files — the local sort by the partition columns replaces
+        # the r15 second repartition(field, gkb) shuffle (3 AQE jobs →
+        # 2). Grams still explode after the dedup, as in r15.
         td = src.select("token", "seq", "field").distinct()
         td.select(
             F.explode(_token_grams("token")).alias("gram"),

@@ -172,13 +172,25 @@ def multi_match_fuzzy(
     max_edits: int = 1,
 ) -> DataFrame:
     """Fuzzy multi_match + relevance top-k (reference ETLTests-2.json:123
-    `multi_match` with fuzziness:auto over 5 fields).
+    `multi_match` with fuzziness:auto over 5 fields): the
+    ``multi_match_scores`` rows ranked by (score desc, id asc)."""
+    scored = multi_match_scores(docs, query, fields, max_edits=max_edits)
+    return scored.orderBy(F.desc("score"), F.col(id_col)).limit(k)
+
+
+def multi_match_scores(
+    docs: DataFrame,
+    query: str,
+    fields: list[tuple[str, float]],
+    max_edits: int = 1,
+) -> DataFrame:
+    """Every doc the multi_match hits, with its ``score`` column, unsorted.
 
     score = Σ_fields weight · (3·#exact-token-hits + 1·#fuzzy-hits)
     where fuzzy = OSA/Damerau distance ≤ max_edits (and not exact) —
     transpositions count as ONE edit, matching ES ``fuzziness`` with
     its default ``transpositions: true`` (see ``fuzzy_cond``).
-    Deterministic, oracle-reproducible; ranking by (score desc, id asc).
+    Deterministic and oracle-reproducible.
 
     ``max_edits=0`` is exact-only: the fuzzy term is SKIPPED entirely
     (not levenshtein≤0 — that predicate still costs a scan of every
@@ -218,8 +230,7 @@ def multi_match_fuzzy(
                 score = score + F.lit(weight) * (3 * exact + 1 * fuzzy)
             else:
                 score = score + F.lit(weight) * (3 * exact)
-    scored = docs.withColumn("score", score).filter(F.col("score") > 0)
-    return scored.orderBy(F.desc("score"), F.col(id_col)).limit(k)
+    return docs.withColumn("score", score).filter(F.col("score") > 0)
 
 
 def phrase_condition(toks, terms: list[str], slop: int = 0):

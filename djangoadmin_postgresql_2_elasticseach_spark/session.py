@@ -26,8 +26,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's standard config."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Build (or reuse) a SparkSession with the engine's standard config.
+    Without ``SPARK_GRAFT_CPUS`` it runs one task slot and one shuffle
+    partition per CPU this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+    )
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)

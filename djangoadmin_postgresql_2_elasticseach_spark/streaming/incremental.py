@@ -132,12 +132,15 @@ class IncrementalEtl:
         ckpt = self.state.get_state(key, DATETIME_MIN)
         docs = builder(self.tables, ckpt).cache()
         try:
-            n = docs.count()
+            # one aggregate over the cached batch: its size and the
+            # checkpoint it advances to
+            n, new_ckpt = docs.agg(
+                F.count(F.lit(1)), F.max("modified")
+            ).first()
             if n == 0:
                 return 0
             self.sink(docs, entity)
             # commit AFTER successful sink (reference etl/main.py:174-177)
-            new_ckpt = docs.agg(F.max("modified")).first()[0]
             if new_ckpt is not None:
                 self.state.set_state(key, str(new_ckpt))
             return n

@@ -57,8 +57,11 @@ POSIX_METASTORE = (
 # r16 verdict #3: the slow long-tail tests (measured call time >= ~10 s
 # in the r16 full-suite duration capture; together ~30 of the suite's
 # ~57 minutes) carry the `full` marker and are DESELECTED by the
-# default run (pytest.ini addopts) so the driver's verification window
-# fits the suite. `make test-full` runs everything. Curation rule:
+# default run (pytest_collection_modifyitems below) so the driver's
+# verification window fits the suite. A full test named by node id on
+# the command line still runs, and any explicit `-m` expression decides
+# on its own (`make test-full` passes `-m "full or not full"` to run
+# everything). Curation rule:
 # tests that guard paths CHANGED in the current round must NOT be
 # listed here — the driver re-verifies those by default. (r16 keeps the
 # snowball SQL-parity pair, the streaming-index tick trio, the
@@ -83,11 +86,9 @@ FULL_ONLY = {
     "test_docstore.py::test_compactions_carry_and_fold_docstore",
     "test_dsir_mmr.py::test_weighted_sample_statistics_and_determinism",
     "test_dsl_indexed.py::test_match_phrase_slop_semantics_and_parity",
-    "test_dsl_indexed.py::test_reference_bodies_route_correctly_and_movies_parity",
     "test_dsl_indexed.py::test_upsert_tick_then_serving_consistent",
     "test_empty_inputs.py::test_dedup_family_empty",
     "test_es_dsl.py::test_explicit_sort_overrides_relevance",
-    "test_es_dsl.py::test_reference_fuzzy_multimatch_body",
     "test_es_dsl.py::test_reference_nested_actor_body",
     "test_es_dsl.py::test_reference_query_string_body",
     "test_graph.py::test_pagerank_matches_power_iteration",
@@ -126,7 +127,18 @@ FULL_ONLY = {
 
 
 def pytest_collection_modifyitems(config, items):
+    named = {a.split("tests/")[-1] for a in config.args if "::" in a}
+    keep, drop = [], []
     for item in items:
         key = item.nodeid.split("tests/")[-1]
         if key in FULL_ONLY or key.split("[")[0] in FULL_ONLY:
             item.add_marker(pytest.mark.full)
+            if not config.option.markexpr and not (
+                key in named or key.split("[")[0] in named
+            ):
+                drop.append(item)
+                continue
+        keep.append(item)
+    if drop:
+        config.hook.pytest_deselected(items=drop)
+        items[:] = keep

@@ -19,8 +19,10 @@ from djangoadmin_postgresql_2_elasticseach_spark.operators.denorm import (
     movie_docs,
 )
 from djangoadmin_postgresql_2_elasticseach_spark.search.dsl import (
+    _apply_query,
     _index_candidates,
     search,
+    search_frame_indexed,
     search_indexed,
 )
 from djangoadmin_postgresql_2_elasticseach_spark.search.index import (
@@ -464,3 +466,139 @@ def test_dsl_slop_body_both_paths(spark, corpus, index_path):
     }
     resp3 = assert_parity(spark, corpus, body3, index_path)
     assert resp3["hits"]["total"]["value"] >= resp["hits"]["total"]["value"]
+
+
+# ---------------------------------------------------------------------------
+# hits.total rides the page query: the count is an observation below
+# the sort, the collapse window and the search_after filter, so it must
+# equal an independent count() of the matched frame on every page shape
+# ---------------------------------------------------------------------------
+
+WIDE_SCHEMA = "doc_id long, text string, source string, lang string, n_chars long"
+SHUFFLE = {"match": {"text": "shuffle"}}
+STOPWORDS = {"match": {"text": "the of an"}}
+
+
+@pytest.fixture(scope="module")
+def wide(spark, tmp_path_factory):
+    """40 docs over 4 partitions: every page below holds fewer hits than
+    the total, so a count that saw only the rows the page needed would
+    come out short."""
+    rows = [
+        (i, f"spark {'shuffle' if i % 2 else 'join'} number {i}",
+         f"src{i % 3}", "en", 100 + i)
+        for i in range(1, 41)
+    ]
+    docs = _with_tokens(
+        spark.createDataFrame(rows, WIDE_SCHEMA).repartition(4, "doc_id")
+    ).localCheckpoint(eager=True)
+    assert docs.rdd.getNumPartitions() >= 4
+    path = str(tmp_path_factory.mktemp("wideidx") / "posting")
+    build_posting_index(
+        docs, path, fields=("text", "source"), id_col="doc_id",
+        tokens_col={"text": "tokens", "source": "source_tokens"},
+    )
+    return docs, path
+
+
+@pytest.mark.parametrize("served", ["scan", "index"])
+@pytest.mark.parametrize(
+    "body, want_total, want_hits",
+    [
+        ({"query": SHUFFLE, "from": 5, "size": 3}, 20, 3),
+        # counted before the collapse: one hit per source, 40 matches
+        ({"query": {"match": {"text": "spark"}},
+          "collapse": {"field": "source"}, "size": 10}, 40, 3),
+        # counted before the cursor filter
+        ({"query": SHUFFLE, "sort": [{"n_chars": "asc"}],
+          "search_after": [110, 10], "size": 3}, 20, 3),
+        # a null cursor: the optimizer proves the page empty and drops
+        # the observation with it — the total must survive (its page is
+        # not pinned)
+        ({"query": SHUFFLE, "sort": [{"n_chars": "asc"}],
+          "search_after": [None, 10], "size": 3}, 20, None),
+        # a scored frame, ranked only by the page's top-k
+        ({"query": {"multi_match": {"query": "shufle", "fields": ["text"],
+                                    "fuzziness": "auto"}}, "size": 3}, 20, 3),
+        ({"query": STOPWORDS, "size": 3}, 0, 0),
+        ({"query": STOPWORDS, "from": 2, "size": 3}, 0, 0),
+        ({"query": STOPWORDS, "collapse": {"field": "source"}, "size": 3}, 0, 0),
+        ({"query": SHUFFLE, "size": 0}, 20, 0),
+    ],
+    ids=[
+        "from", "collapse", "search_after", "search_after_null", "fuzzy",
+        "stopwords", "stopwords_from", "stopwords_collapse", "size0",
+    ],
+)
+def test_total_equals_independent_count(
+    spark, wide, served, body, want_total, want_hits
+):
+    docs, path = wide
+    if served == "index":
+        resp = search_indexed(spark, docs, body, path, id_col="doc_id")
+        frame, _ = search_frame_indexed(
+            spark, docs, body["query"], path, "doc_id"
+        )
+    else:
+        resp = search(docs, body, id_col="doc_id")
+        frame, _ = _apply_query(docs, body["query"], "doc_id")
+    assert frame.count() == want_total
+    assert resp["hits"]["total"]["value"] == want_total
+    if want_hits is not None:
+        assert len(resp["hits"]["hits"]) == want_hits
+
+
+def test_match_response_spark_job_budget(spark, wide):
+    """An index-served match response is one page action: hits.total
+    rides it as an observation instead of a count() that re-runs the
+    candidate probe, the semi-join and the docstore read. Pinned at the
+    one-pass job count, so a second pass cannot creep back. Job ids are
+    global and monotonic, so the count is the id delta between two
+    probe jobs (the tick budget test in test_index_v2.py does the same)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def probe_id():
+        g = f"probe-{uuid.uuid4()}"
+        sc.setJobGroup(g, g)
+        spark.range(1).count()
+        sc.setJobGroup("other", "other")
+        return max(sc.statusTracker().getJobIdsForGroup(g))
+
+    docs, path = wide
+    body = {"query": SHUFFLE, "size": 3}
+    n0 = probe_id()
+    resp = search_indexed(spark, docs, body, path, id_col="doc_id")
+    jobs = probe_id() - n0 - 1
+    assert resp["hits"]["total"]["value"] == 20
+    # one page action: candidate probe, semi-join and docstore read
+    # (the two-pass response took 9)
+    assert jobs <= 5, f"match response job budget blown: {jobs}"
+
+
+def test_total_exact_over_sort_merge_join(spark, wide):
+    """With broadcasts off the candidate semi-join is a sort-merge join,
+    whose output is sorted by doc_id within each partition — already in
+    a match page's order, which lets a top-k stop after `size` rows a
+    partition. The total must still count every match."""
+    docs, path = wide
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        resp = search_indexed(
+            spark, docs, {"query": SHUFFLE, "size": 3}, path, id_col="doc_id"
+        )
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert resp["hits"]["total"]["value"] == 20
+    assert [h["_id"] for h in resp["hits"]["hits"]] == ["1", "3", "5"]

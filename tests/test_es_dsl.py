@@ -311,6 +311,25 @@ def test_search_after_keyset_pagination(spark):
     assert [h["_id"] for h in p3] == ["7"]
 
 
+def test_total_counts_every_row_of_a_presorted_frame(spark):
+    """A range scan arrives sorted by id within each partition — the
+    page's own order — so a top-k may stop after `from + size` rows a
+    partition; hits.total is observed under it and must still see all."""
+    frame = spark.range(0, 100, numPartitions=4).withColumnRenamed(
+        "id", "doc_id"
+    )
+    for body in (
+        {"query": {"match_all": {}}, "size": 3},
+        {"query": {"match_all": {}}, "from": 4, "size": 3},
+    ):
+        resp = search(frame, body, id_col="doc_id")
+        assert resp["hits"]["total"]["value"] == 100
+        start = body.get("from", 0)
+        assert [h["_id"] for h in resp["hits"]["hits"]] == [
+            str(i) for i in range(start, start + 3)
+        ]
+
+
 def test_collapse_one_hit_per_field_value(spark):
     frame = spark.createDataFrame(
         [

@@ -167,10 +167,25 @@ def test_long_ingest_heartbeats_keep_lease_ttl_fresh(
 
     import djangoadmin_postgresql_2_elasticseach_spark.metastore as MS
 
-    # short enough that the pass outlives it even on a WARM session
-    # (build+tick ≈ 2.3 s there), long enough that the ~TTL/3 beat
-    # cadence has 2× slack against scheduler starvation on a loaded box
+    # long enough that the ~TTL/3 beat cadence has 2× slack against
+    # scheduler starvation on a loaded box
     monkeypatch.setattr(MS, "LEASE_TTL_S", 1.2)
+    # the pass must outlive the TTL WHILE it holds the lease on any host,
+    # however fast: each pooled write first waits out 1.5 TTL under the
+    # lease (a stand-in for one long Spark write), so only the heartbeat
+    # can keep the lease fresh
+    real_write = IX._write_posting_batch
+    held: list[float] = []
+
+    def slow_write(*args, **kwargs):
+        t = _time.monotonic()
+        _time.sleep(1.5 * MS.LEASE_TTL_S)
+        try:
+            return real_write(*args, **kwargs)
+        finally:
+            held.append(_time.monotonic() - t)
+
+    monkeypatch.setattr(IX, "_write_posting_batch", slow_write)
     path = str(tmp_path / "idx")
     lp = IX._lease_path(IX._posting_meta_path(path))
     store = MS.get_metastore()
@@ -209,9 +224,10 @@ def test_long_ingest_heartbeats_keep_lease_ttl_fresh(
     stop.set()
     t.join(timeout=2)
     assert not violations, violations
-    # the scenario must be real: the pass outlived the TTL and the
-    # sampler actually observed the lease
+    # the scenario must be real: the pass outlived the TTL, every write
+    # held the lease past it, and the sampler actually observed the lease
     assert elapsed > MS.LEASE_TTL_S
+    assert len(held) == 2 and min(held) > MS.LEASE_TTL_S, held
     assert seen, "sampler never saw the lease"
     assert store.read_lease(lp) is None  # released at commit
 
