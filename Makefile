@@ -12,8 +12,8 @@ test-norename:
 	  tests/test_icontains_index.py tests/test_search_index.py -q
 
 # fast suite: oracle parity at sf0.001 + unit/property/plan/streaming
-# tests, MINUS the `full`-marked slow long-tail (pytest.ini deselects
-# them so the driver's verification window fits — r16 verdict #3)
+# tests, MINUS the `full`-marked slow long-tail (tests/conftest.py
+# deselects them so the default run fits its time window — r16 verdict #3)
 test:
 	python -m pytest tests/ -q
 
@@ -41,4 +41,5 @@ smoke:
 	print('queries:', len(q), 'oracles:', len(o))"
 
 lint:
-	python -m compileall -q djangoadmin_postgresql_2_elasticseach_spark tests bench.py __spark_entry__.py
+	python -m compileall -q djangoadmin_postgresql_2_elasticseach_spark tests bench.py \
+	  __spark_entry__.py profile_query.py profile_pipeline.py

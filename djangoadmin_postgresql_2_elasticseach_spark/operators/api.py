@@ -21,12 +21,15 @@ precomputed page index at 100 TB.
 
 from __future__ import annotations
 
+import logging
 import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .denorm import ROLE_SYNONYMS
+
+logger = logging.getLogger(__name__)
 
 
 def film_listing(
@@ -139,8 +142,10 @@ def film_detail(
                 "id",
                 "left_semi",
             )
-        except ValueError:
-            base = None  # precondition miss — scan below
+        except ValueError as e:
+            # precondition miss — scan below
+            logger.debug("film_detail falls back to the scan: %s", e)
+            base = None
     if base is None:
         base = listing.filter(
             F.lower(F.col("id")).contains(pk_fragment.lower())
@@ -221,8 +226,9 @@ def icontains_auto(
             if id_col != "doc_id":
                 hits = hits.withColumnRenamed("doc_id", id_col)
             return hits
-        except ValueError:
-            pass  # precondition miss — the scan IS the right plan
+        except ValueError as e:
+            # precondition miss — the scan IS the right plan
+            logger.debug("icontains_auto falls back to the scan: %s", e)
     return docs.filter(
         F.lower(F.col(field).cast("string")).contains(fragment.lower())
     ).select(id_col, field)

@@ -1086,12 +1086,19 @@ def _ivfpq_meta_path(path: str) -> str:
 
 def _ivfpq_meta(path: str) -> dict:
     """Full sidecar dict: frozen quantizers + the commit watermarks
-    (next_seq / committed_seq / dead_ranges — absent on pre-r12 legacy
-    indexes, which read with full visibility)."""
+    (next_seq / committed_seq / dead_ranges). A sidecar with no
+    counter (the pre-commit-protocol format) raises ValueError:
+    rebuild the index."""
     import json
 
     with open(_ivfpq_meta_path(path), encoding="utf-8") as fh:
-        return json.load(fh)
+        meta = json.load(fh)
+    if meta.get("committed_seq") is None:
+        raise ValueError(
+            f"ivfpq index at {path} has no seq counter in its sidecar — "
+            "an unsupported pre-counter format; rebuild it"
+        )
+    return meta
 
 
 def read_ivfpq_meta(path: str) -> tuple[list, list]:
@@ -1707,7 +1714,8 @@ def build_ivfpq_index(
                 prev_gen = 0
                 if os.path.exists(mpath):
                     prev_gen = int(
-                        _ivfpq_meta(path).get("generation") or 0
+                        (store.load_meta(mpath) or {}).get("generation")
+                        or 0
                     )
                 gen = prev_gen + 1
                 groot = os.path.join(path, f"_gen-{gen}")
@@ -1821,7 +1829,7 @@ def append_ivfpq_index(
     store_cols = _ivfpq_meta(path).get("store_cols")
     n_store = _ivfpq_meta(path).get("n_store_buckets", 16)
     mpath = _ivfpq_meta_path(path)
-    seq = alloc_index_seqs(mpath, 1, legacy_probe=("_SUCCESS",))
+    seq = alloc_index_seqs(mpath, 1)
     with _release_lease_on_error(mpath), _lease_heartbeats(mpath):
         root = _ivfpq_root(path)
 
@@ -1885,7 +1893,7 @@ def delete_from_ivfpq_index(
     )
 
     mpath = _ivfpq_meta_path(path)
-    seq = alloc_index_seqs(mpath, 1, legacy_probe=("_SUCCESS",))
+    seq = alloc_index_seqs(mpath, 1)
     with _release_lease_on_error(mpath), _lease_heartbeats(mpath):
         ids.select(
             F.col(id_col), F.lit(int(seq)).cast("long").alias("seq")
@@ -1920,7 +1928,7 @@ def upsert_ivfpq_index(
     store_cols = _ivfpq_meta(path).get("store_cols")
     n_store = _ivfpq_meta(path).get("n_store_buckets", 16)
     mpath = _ivfpq_meta_path(path)
-    seq_t = alloc_index_seqs(mpath, 2, legacy_probe=("_SUCCESS",))
+    seq_t = alloc_index_seqs(mpath, 2)
     seq_a = seq_t + 1
     with _release_lease_on_error(mpath), _lease_heartbeats(mpath):
         root = _ivfpq_root(path)
@@ -2168,13 +2176,9 @@ def ivfpq_query_indexed(
     tombstones exist), and only COMMITTED ticks are visible (the
     sidecar watermark — a crashed half-written append can never serve
     partial results)."""
-    import os
-
     from ..search.index import _apply_tombstones, _read_or_empty
 
-    meta = (
-        _ivfpq_meta(path) if os.path.exists(_ivfpq_meta_path(path)) else None
-    )
+    meta = _ivfpq_meta(path)
     probes = probe_buckets(query_vec, planes, probe_hamming)
     codes_df = _read_or_empty(
         spark, _ivfpq_root(path, meta),

@@ -147,14 +147,12 @@ def bm25_topk_from_index(
     - per-term document frequencies are COUNTs over those same pruned
       postings (one live row per (doc, token));
     - N and avgdl come from the commit-maintained field stats
-      (index_field_stats — a meta-sidecar read on layout-v2 indexes,
-      the stats/ artifact on v1; churn-bounded dead correction), NOT a
-      full-doclens aggregate per query;
-    - dl comes OFF THE POSTING ROWS themselves on layout-v2 indexes
-      (Lucene's norms-with-postings: the pruned bucket probe already
-      holds the length norm, and the O(corpus) doclens table is not in
-      the serve plan at all — the r12 verdict's last serving flag);
-      v1 indexes keep the historical candidate-docs doclens join.
+      (index_field_stats — a meta-sidecar read plus a churn-bounded
+      dead correction), NOT a full-doclens aggregate per query;
+    - dl comes OFF THE POSTING ROWS themselves (Lucene's
+      norms-with-postings: the pruned bucket probe already holds the
+      length norm, and the O(corpus) doclens table is not in the serve
+      plan at all — the r12 verdict's last serving flag).
 
     Identical output to bm25_topk over the same docs — N appends ==
     one-shot (tf/dl/df are per-doc facts, df a COUNT over disjoint
@@ -164,7 +162,6 @@ def bm25_topk_from_index(
     stem=False index would silently match nothing."""
     from .index import (
         index_field_stats,
-        read_doclens,
         field_stem as IX_field_stem,
         read_posting_meta,
         read_postings,
@@ -178,7 +175,6 @@ def bm25_topk_from_index(
     if not qterms:
         raise ValueError("empty query after analysis")
     buckets = term_buckets(qterms, meta["n_buckets"])
-    with_dl = meta.get("layout_v", 1) >= 2
     posts = read_postings(spark, path).filter(
         (F.col("field") == field)
         & F.col("tkb").isin(buckets)
@@ -191,9 +187,9 @@ def bm25_topk_from_index(
             ).alias(f"tf{i}")
             for i, t in enumerate(qterms)
         ],
-        # v2: every live posting row of a doc carries the doc's length
+        # every live posting row of a doc carries the doc's length
         # norm, so dl falls out of the SAME pruned probe
-        *([F.max("dl").alias("dl")] if with_dl else []),
+        F.max("dl").alias("dl"),
     )
     # df over the PRUNED postings (live rows are one per (doc, token))
     dfs = posts.agg(
@@ -205,12 +201,7 @@ def bm25_topk_from_index(
         ]
     )
     stats = dfs.crossJoin(F.broadcast(index_field_stats(spark, path, field)))
-    if with_dl:
-        per_doc = pivot
-    else:  # v1 (pre-r13) layout: candidate-docs doclens join
-        lens = read_doclens(spark, path).filter(F.col("field") == field)
-        per_doc = pivot.join(lens.select("doc_id", "dl"), "doc_id")
-    scored = _score_per_doc(per_doc, stats, len(qterms), "doc_id", k, k1, b)
+    scored = _score_per_doc(pivot, stats, len(qterms), "doc_id", k, k1, b)
     return (
         scored if id_col == "doc_id"
         else scored.withColumnRenamed("doc_id", id_col)
@@ -373,9 +364,8 @@ def multimatch_bm25_from_index(
        boosts;
     3. per field: one aggregation to per-doc (tf_i, max boost_i),
        df_i from the same frame, N/avgdl from the commit-maintained
-       field stats, dl off the posting rows themselves (layout v2 —
-       no doclens scan in the plan; v1 indexes keep the candidate
-       join) — then the identical RSJ
+       field stats, dl off the posting rows themselves (no doclens
+       scan in the plan) — then the identical RSJ
        score · Lucene fuzzy boost (1 − d/len(term)) expression the
        scan-based ``multi_match_bm25`` builds, best_fields MAX across
        fields, 4dp rounding, ties by id.
@@ -386,7 +376,6 @@ def multimatch_bm25_from_index(
     — leave None for exact scan parity."""
     from .index import (
         index_field_stats,
-        read_doclens,
         field_stem as IX_field_stem,
         read_posting_meta,
         read_postings,
@@ -493,7 +482,6 @@ def multimatch_bm25_from_index(
     joined = posts.join(F.broadcast(cand), ["field", "token"])
 
     # 3. per-field BM25 with fuzzy boosts, best_fields combine
-    with_dl = meta.get("layout_v", 1) >= 2
     per_field_scores = []
     for field in fields:
         pf = joined.filter(F.col("field") == field)
@@ -507,7 +495,7 @@ def multimatch_bm25_from_index(
                 for i in range(len(qterms))
             ],
             *[F.max(F.col(f"b{i}")).alias(f"bo{i}") for i in range(len(qterms))],
-            *([F.max("dl").alias("dl")] if with_dl else []),
+            F.max("dl").alias("dl"),
         )
         dfs = per_doc.agg(
             *[
@@ -520,9 +508,6 @@ def multimatch_bm25_from_index(
         stats = dfs.crossJoin(
             F.broadcast(index_field_stats(spark, path, field))
         )
-        if not with_dl:  # v1 layout: candidate-docs doclens join
-            lens = read_doclens(spark, path).filter(F.col("field") == field)
-            per_doc = per_doc.join(lens.select("doc_id", "dl"), "doc_id")
         scored = per_doc.crossJoin(F.broadcast(stats))
         fs = F.lit(0.0)
         for i in range(len(qterms)):

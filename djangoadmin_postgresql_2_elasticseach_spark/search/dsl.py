@@ -19,6 +19,7 @@ to run against it.
 
 from __future__ import annotations
 
+import logging
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -26,6 +27,8 @@ from pyspark.sql import functions as F
 
 from .query import analyze_query, field_tokens, multi_match_scores
 from ..functions.text import analyze
+
+logger = logging.getLogger(__name__)
 
 DEFAULT_SIZE = 10
 
@@ -352,24 +355,30 @@ def _sort_keys(body: dict, scored: bool, id_col: str) -> list[tuple[str, str]]:
 def _after_predicate(keys: list[tuple[str, str]], values: list):
     """Lexicographic strictly-after filter for search_after: row > the
     cursor tuple under the sort order — the keyset-pagination predicate
-    (pushes to the scan on the leading key; no O(offset) skip)."""
+    (pushes to the scan on the leading key; no O(offset) skip).
+
+    Null-aware in the page sort's own null order (Spark's ``asc()``
+    puts nulls first, ``desc()`` puts them last), so a cursor holding
+    a null — the `sort` values of a hit whose sort field is null —
+    continues the walk instead of matching nothing. The equal-prefix
+    terms compare with ``eqNullSafe``."""
     if len(values) != len(keys):
         raise ValueError(
             f"search_after needs {len(keys)} values (one per sort key "
             f"incl. the id tiebreak), got {len(values)}"
         )
+
+    def after(col, order, v):
+        if order == "desc":  # nulls last: only a null follows a value
+            return F.lit(False) if v is None else (col < v) | col.isNull()
+        # nulls first: every value follows a null
+        return col.isNotNull() if v is None else col > v
+
     cond = None
     for i, (field, order) in enumerate(keys):
-        eq = None
+        clause = after(F.col(field), order, values[i])
         for j in range(i):
-            c = F.col(keys[j][0]) == F.lit(values[j])
-            eq = c if eq is None else (eq & c)
-        strict = (
-            F.col(field) < F.lit(values[i])
-            if order == "desc"
-            else F.col(field) > F.lit(values[i])
-        )
-        clause = strict if eq is None else (eq & strict)
+            clause = F.col(keys[j][0]).eqNullSafe(F.lit(values[j])) & clause
         cond = clause if cond is None else (cond | clause)
     return cond
 
@@ -402,9 +411,8 @@ def _respond(frame: DataFrame, scored: bool, body: dict, id_col: str) -> dict:
     the page sorts by one more key that no input can be sorted by.
     `size: 0` has no page and counts directly. When the optimizer
     proves the page empty (an all-stopword match under `from` or
-    `collapse`, a search_after cursor holding a null) it drops the
-    subtree, observation included, and no page job runs; the total is
-    then counted."""
+    `collapse`) it drops the subtree, observation included, and no page
+    job runs; the total is then counted."""
     from pyspark.sql import Observation, Window
 
     size = body.get("size", DEFAULT_SIZE)
@@ -592,13 +600,13 @@ def _index_candidates(
             return None, q
         cand_tokens = set(qtoks)
         if mm.get("fuzziness"):
-            # expand against the term dictionary (length-band pruned;
-            # on layout-v3 indexes the band is a partition filter) —
-            # same plan multimatch_bm25_from_index uses. Each query
-            # term's expansion is CAPPED at max_expansions (ES's
-            # default 50, closest first — Lucene's maxExpansions): the
-            # driver collect is bounded by construction, |terms| ·
-            # max_expansions rows, however adversarial the vocabulary.
+            # expand against the term dictionary (the length band is a
+            # partition filter) — same plan multimatch_bm25_from_index
+            # uses. Each query term's expansion is CAPPED at
+            # max_expansions (ES's default 50, closest first —
+            # Lucene's maxExpansions): the driver collect is bounded by
+            # construction, |terms| · max_expansions rows, however
+            # adversarial the vocabulary.
             # The cap makes this a CAPPED candidate set, NOT a superset
             # of the scan path's fuzzy hits: past max_expansions
             # dictionary terms within edit distance 1 of a query term,
@@ -736,6 +744,13 @@ def search_frame_indexed(
     if q is not None and meta.get("stem", True) is True:
         cands, residual = _index_candidates(spark, index_path, q, meta)
     if cands is None:
+        logger.debug(
+            "index %s serves no leaf of %s (%s); scanning the corpus",
+            index_path, q,
+            "no index-servable full-text leaf"
+            if meta.get("stem", True) is True
+            else "the index is not stemmed",
+        )
         return _apply_query(docs, q, id_col)
     pruned = docs.join(
         cands.select(F.col("doc_id").alias(id_col)), id_col, "left_semi"

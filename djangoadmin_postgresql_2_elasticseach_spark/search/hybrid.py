@@ -125,8 +125,8 @@ def hybrid_topk_indexed(
     doc_id_col: str = "doc_id",
 ) -> DataFrame:
     """The FULLY INDEX-RESIDENT hybrid retrieval serve: lexical branch
-    = BM25 off the persisted posting index (layout v2 — the pruned
-    bucket probe is the whole read), vector branch = ADC off the
+    = BM25 off the persisted posting index (dl on the posting rows —
+    the pruned bucket probe is the whole read), vector branch = ADC off the
     persisted IVF-PQ index (partition-pruned bucket probe, quantizers
     from the sidecar), fused by RRF. NEITHER branch touches a corpus
     or float table — this is the 100 TB serving shape: two

@@ -224,9 +224,9 @@ def doc_frequencies(postings: DataFrame) -> DataFrame:
 #   dead_ranges   seq ranges allocated by a writer that crashed before
 #                 its commit; permanently invisible
 #
-# A tick is: allocate seq(s) → write postings, doclens, stats (and for
-# an upsert, tombstones) stamped with them → move committed_seq in ONE
-# atomic sidecar replace. A crash anywhere before the commit leaves
+# A tick is: allocate seq(s) → write postings, doclens, termdict (and
+# for an upsert, tombstones) stamped with them → move committed_seq in
+# ONE atomic sidecar replace. A crash anywhere before the commit leaves
 # every partial write invisible (torn postings-without-doclens can
 # never serve), the next allocation fences the orphan seqs into
 # dead_ranges, and a re-delivered batch lands under fresh seqs with no
@@ -246,25 +246,22 @@ N_TOKEN_BUCKETS = 16
 # ids' buckets
 N_STORE_BUCKETS = 16
 
-# layout version persisted in the meta. v2 (r13) carries the document
-# length ``dl`` ON EVERY POSTING ROW (Lucene's norms-with-postings
-# posture: the length norm lives beside the postings, read only for
-# scored candidates) and keeps the per-field corpus statistics in the
-# META SIDECAR instead of a stats/ parquet dataset — so a BM25 serve
-# reads NOTHING but the pruned posting buckets plus the meta: the
-# doclens table (O(corpus), partitioned by field only) leaves the
-# serve path entirely (the r12 verdict's last O(corpus) serving read).
-# v1 indexes (pre-r13) keep the doclens join + stats/ artifact; a FULL
-# compaction migrates them to v2.
+# The one on-disk format, persisted in the meta as ``layout_v``. Every
+# posting row carries its document's length ``dl`` (Lucene's
+# norms-with-postings posture: the length norm sits beside the
+# postings, read only for scored candidates), the per-field corpus
+# statistics live in the meta sidecar's ``field_stats`` (folded in at
+# each commit), and termdict/ is partitioned by (field, tlen), tlen =
+# min(len(token), TLEN_CAP), so fuzzy dictionary expansion (reachable
+# lengths = query-term length ± max_edits) reads only the candidate
+# length-band directories. A BM25 serve reads nothing but the pruned
+# posting buckets plus the sidecar.
 #
-# Layout v3 (r14) additionally partitions termdict/ by (field, tlen) —
-# tlen = min(len(token), TLEN_CAP) — so fuzzy dictionary expansion
-# (reachable lengths = query-term length ± max_edits) reads ONLY the
-# candidate length-band directories instead of the field's whole
-# vocabulary (the r13 verdict's last sublinear-but-unpruned serve
-# read: at web scale a field vocabulary is 10⁸–10⁹ terms). v1/v2
-# termdicts stay field-partitioned; ticks keep writing the layout the
-# index was built with, and a FULL compaction migrates.
+# A sidecar in any other format (another layout_v, or no seq counter)
+# is rejected with a ValueError before anything is read or written:
+# rebuild the index. There is no migration — the ES posture for old
+# on-disk formats (reindex), and cached indexes carry the version in
+# their cache key.
 LAYOUT_V = 3
 
 # Length-band cap for the termdict partition column: vocab length
@@ -285,8 +282,7 @@ POSTINGS_SCHEMA = (
     "seq long, field string, tkb int"
 )
 DOCLENS_SCHEMA = "doc_id long, dl long, seq long, field string"
-STATS_SCHEMA = "n_docs long, sum_dl long, seq long, field string"
-TERMDICT_SCHEMA = "token string, seq long, field string"
+TERMDICT_SCHEMA = "token string, seq long, field string, tlen int"
 CHARDICT_SCHEMA = "gram string, token string, seq long, field string, gkb int"
 
 # character n-gram width for the opt-in chardict/ tier (PostgreSQL
@@ -312,7 +308,7 @@ def term_buckets(terms, n_buckets: int) -> list[int]:
 
 
 def _tlen_band(token) -> "F.Column":
-    """Termdict partition key (layout v3): capped token length."""
+    """Termdict partition key: capped token length."""
     return F.least(F.length(token), F.lit(TLEN_CAP))
 
 
@@ -506,7 +502,6 @@ def alloc_index_seqs(
     meta_path: str,
     n: int = 1,
     defaults: dict | None = None,
-    legacy_probe: tuple[str, ...] = (),
 ) -> int:
     """Allocate ``n`` consecutive seqs from the index's persisted
     counter (single-writer contract — read-increment-replace of the
@@ -517,42 +512,36 @@ def alloc_index_seqs(
     dead_ranges first — those orphan rows stay invisible forever even
     after committed_seq moves past them.
 
-    ``defaults`` are setdefault-merged into the meta (an index created
-    implicitly by its first upsert tick — the CDC-sink path — records
-    its analyzer/layout config here). ``legacy_probe``: subpaths whose
-    existence marks a pre-counter index (rows stamped with
-    time.time_ns()); the counter then starts ABOVE the current clock so
-    ordering across the migration boundary is preserved.
+    A missing sidecar starts the counter at 0, with ``defaults`` as its
+    config (an index created implicitly by its first tick — the
+    CDC-sink path — records its analyzer/layout config here); on an
+    existing sidecar ``defaults`` only fill absent keys. An existing
+    sidecar with no counter raises ValueError (rebuild the index).
 
     Acquires the index's single-writer LEASE first (held until
     commit_index_seq): a concurrent live writer raises
     ConcurrentIndexWriter instead of silently losing allocations."""
     _acquire_writer_lease(meta_path)
-    meta = _load_meta(meta_path) or {}
-    for k, v in (defaults or {}).items():
-        meta.setdefault(k, v)
-    if "next_seq" not in meta:
-        root = os.path.dirname(meta_path)
-        legacy = any(
-            os.path.exists(os.path.join(root, s)) for s in legacy_probe
-        )
-        if legacy:
-            import time as _time
-
-            base = _time.time_ns()
-        else:
-            base = 0
-        meta["next_seq"] = meta["committed_seq"] = base
-        meta.setdefault("dead_ranges", [])
-    if meta["next_seq"] > meta["committed_seq"]:
-        meta["dead_ranges"] = _merge_range(
-            meta.get("dead_ranges") or [],
-            meta["committed_seq"] + 1,
-            meta["next_seq"],
-        )
-    first = meta["next_seq"] + 1
-    meta["next_seq"] += n
-    _write_meta(meta_path, meta)
+    with _release_lease_on_error(meta_path):
+        meta = _load_meta(meta_path)
+        if meta is None:
+            meta = {"next_seq": 0, "committed_seq": 0, "dead_ranges": []}
+        elif "next_seq" not in meta:
+            raise ValueError(
+                f"index sidecar {meta_path} has no seq counter — an "
+                "unsupported pre-counter format; rebuild the index"
+            )
+        for k, v in (defaults or {}).items():
+            meta.setdefault(k, v)
+        if meta["next_seq"] > meta["committed_seq"]:
+            meta["dead_ranges"] = _merge_range(
+                meta.get("dead_ranges") or [],
+                meta["committed_seq"] + 1,
+                meta["next_seq"],
+            )
+        first = meta["next_seq"] + 1
+        meta["next_seq"] += n
+        _write_meta(meta_path, meta)
     return first
 
 
@@ -564,10 +553,9 @@ def commit_index_seq(
     Releases the single-writer lease taken at allocation.
 
     ``stats_delta`` ({field: (n_docs, sum_dl)}) is ADDED into the
-    meta's ``field_stats`` under the SAME atomic replace — layout-v2
-    indexes keep BM25's corpus statistics in the sidecar, so the
-    commit and the stats move together (a crashed tick updates
-    neither).
+    meta's ``field_stats`` under the SAME atomic replace — BM25's
+    corpus statistics live in the sidecar, so the commit and the stats
+    move together (a crashed tick updates neither).
 
     Verifies lease OWNERSHIP before publishing (r13 verdict #4): this
     is a public module function, and an out-of-protocol caller must
@@ -594,12 +582,9 @@ def commit_index_seq(
     _release_writer_lease(meta_path)
 
 
-def _visible(df: DataFrame, meta: dict | None) -> DataFrame:
+def _visible(df: DataFrame, meta: dict) -> DataFrame:
     """Filter to COMMITTED rows: seq <= committed_seq and outside every
-    dead range. Identity for legacy indexes (no counter in the meta)
-    — their rows predate the protocol and are all visible."""
-    if not meta or meta.get("committed_seq") is None:
-        return df
+    dead range."""
     cond = F.col("seq") <= F.lit(int(meta["committed_seq"]))
     for lo, hi in meta.get("dead_ranges") or []:
         cond = cond & ~F.col("seq").between(int(lo), int(hi))
@@ -610,21 +595,41 @@ def _posting_meta_path(path: str) -> str:
     return os.path.join(path, "_index_meta.json")
 
 
+def _check_format(path: str, meta: dict | None) -> None:
+    """Reject a sidecar this engine cannot read or extend — one whose
+    ``layout_v`` is not LAYOUT_V or that has no commit counter — with a
+    ValueError naming the path. Readers and writers call it before
+    touching any artifact, so a stale index is never served and never
+    written to. No sidecar at all is a fresh path."""
+    if meta is None:
+        return
+    if meta.get("layout_v") != LAYOUT_V or meta.get("committed_seq") is None:
+        raise ValueError(
+            f"posting index at {path} has layout_v="
+            f"{meta.get('layout_v')!r} and committed_seq="
+            f"{meta.get('committed_seq')!r}; this engine reads only "
+            f"layout_v={LAYOUT_V} with a seq counter — rebuild it"
+        )
+
+
 def read_posting_meta(path: str) -> dict:
     """The index's build-time config: analyzer ({"stem", "fields"}),
     layout ("n_buckets" — serving computes its partition filters from
-    THIS, never a code constant), and the commit watermarks. Absent
-    keys (pre-meta / pre-r12 indexes) fall back to the historical
-    defaults; an absent committed_seq means legacy full visibility."""
+    THIS, never a code constant), and the commit watermarks. A path
+    with no sidecar reads as an empty index (committed_seq 0); a
+    sidecar in another format raises (_check_format). Keys a sidecar
+    lacks (one a delete created before the first tick) fall back to
+    the defaults."""
     _maybe_recover_folds(path)
-    meta = _load_meta(_posting_meta_path(path)) or {}
+    meta = _load_meta(_posting_meta_path(path))
+    _check_format(path, meta)
+    if meta is None:
+        meta = {"layout_v": LAYOUT_V, "committed_seq": 0}
     meta.setdefault("stem", True)
     meta.setdefault("fields", ["text"])
     meta.setdefault("n_buckets", N_TOKEN_BUCKETS)
     meta.setdefault("store_cols", None)
     meta.setdefault("n_store_buckets", N_STORE_BUCKETS)
-    # pre-r13 indexes: no dl on posting rows, stats live in stats/
-    meta.setdefault("layout_v", 1)
     meta.setdefault("field_stats", None)
     # fields whose positions were flattened across array elements
     # (element_tokens) — they serve `match` but NOT phrase queries
@@ -691,8 +696,8 @@ def _reclaim_generations(path: str, keep: int) -> None:
             store.remove_tree(os.path.join(path, d))
     if keep:
         for d in (
-            "postings", "doclens", "stats", "termdict", "chardict",
-            "docstore", "_tombstones",
+            "postings", "doclens", "termdict", "chardict", "docstore",
+            "_tombstones",
         ):
             store.remove_tree(os.path.join(path, d))
 
@@ -705,7 +710,6 @@ def _posting_partials(
     tokens_col,
     seq: int,
     n_buckets: int,
-    with_dl: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """One batch's index rows: postings (field, token, doc_id, tf) over
     the NON-deduplicated analyzed stream (tf is the BM25 term
@@ -751,9 +755,9 @@ def _posting_partials(
     post_parts = []
     for f in fields:
         col = tokens_col.get(f)
-        # layout v2: dl rides every posting row (the Lucene norms
-        # posture) so BM25 serves from the pruned bucket probe alone
-        # and never joins the O(corpus) doclens table. dl is the doc's
+        # dl rides every posting row (the Lucene norms posture) so
+        # BM25 serves from the pruned bucket probe alone and never
+        # joins the O(corpus) doclens table. dl is the doc's
         # TOTAL analyzed-token count — for a pre-analyzed stored array
         # that is just size(col), computed in the SAME projection as
         # the explode: the (field, doc_id) window the r13 layout used
@@ -762,7 +766,6 @@ def _posting_partials(
         # one shuffle per tick field, not two). The in-plan analyzer
         # path keeps the window — a size(analyze(..)) twin would let
         # CollapseProject duplicate the very large Snowball expression.
-        dl_at_source = with_dl and col is not None
         # spread is KEYED BY doc_id (not round-robin): every row of a
         # doc lands in one partition, so the (doc_id, token) tf
         # aggregation below — and the in-plan dl window — are
@@ -778,11 +781,7 @@ def _posting_partials(
             toks = spread(docs.select(id_col, col), [id_col]).select(
                 F.col(id_col).alias("doc_id"),
                 F.posexplode(F.col(col)).alias("pos", "token"),
-                *(
-                    [F.size(F.col(col)).cast("long").alias("dl")]
-                    if dl_at_source
-                    else []
-                ),
+                F.size(F.col(col)).cast("long").alias("dl"),
             )
         else:
             toks = spread(docs.select(id_col, f), [id_col]).select(
@@ -795,9 +794,9 @@ def _posting_partials(
             F.count(F.lit(1)).alias("tf"),
             F.sort_array(F.collect_list("pos")).alias("positions"),
             # dl is constant per doc — max() just carries it through
-            *([F.max("dl").alias("dl")] if dl_at_source else []),
+            *([F.max("dl").alias("dl")] if col is not None else []),
         )
-        if with_dl and not dl_at_source:
+        if col is None:
             from pyspark.sql import Window
 
             part = part.withColumn(
@@ -811,34 +810,23 @@ def _posting_partials(
                 "tf",
                 "positions",
                 _token_bucket("token", n_buckets).alias("tkb"),
-                *(["dl"] if with_dl else []),
+                "dl",
             )
         )
     posts = post_parts[0]
     for p in post_parts[1:]:
         posts = posts.unionByName(p)
-    posts = posts.withColumn("seq", F.lit(int(seq)).cast("long"))
-    if with_dl:
-        # keep the persisted column order of the pre-r15 layout
-        # (field..tkb, seq, dl) so fresh tick files match the files an
-        # existing index already holds column-for-column
-        posts = posts.select(
-            "field", "token", "doc_id", "tf", "positions", "tkb",
-            "seq", "dl",
-        )
+    # the persisted column order (field..tkb, seq, dl): fresh tick files
+    # match the files an existing index already holds column-for-column
+    posts = posts.withColumn("seq", F.lit(int(seq)).cast("long")).select(
+        "field", "token", "doc_id", "tf", "positions", "tkb", "seq", "dl",
+    )
     posts = posts.localCheckpoint(eager=True)
-    if with_dl:
-        lens = (
-            posts.groupBy("field", "doc_id", "seq")
-            .agg(F.max("dl").alias("dl"))
-            .select("field", "doc_id", "dl", "seq")
-        )
-    else:
-        lens = (
-            posts.groupBy("field", "doc_id", "seq")
-            .agg(F.sum("tf").alias("dl"))
-            .select("field", "doc_id", "dl", "seq")
-        )
+    lens = (
+        posts.groupBy("field", "doc_id", "seq")
+        .agg(F.max("dl").alias("dl"))
+        .select("field", "doc_id", "dl", "seq")
+    )
     return posts, lens
 
 
@@ -849,11 +837,10 @@ def _write_posting_batch(
     mode: str,
     dest_root: str | None = None,
     fields: tuple[str, ...] = (),
-    layout_v: int = LAYOUT_V,
     extra_writes: tuple = (),
     char_ngrams: int | None = None,
     char_fields: tuple[str, ...] | None = None,
-) -> dict | None:
+) -> dict:
     """One batch's writes. POSTINGS are repartitioned by the partition
     columns first: without it every task holds an open parquet writer
     per partition directory it touches (tasks × ~17 dirs of concurrent
@@ -871,24 +858,21 @@ def _write_posting_batch(
     partition columns satisfies the dynamic-partition write ordering
     (r16: one exchange + one write job each, was two exchanges).
 
-    Alongside postings/doclens the batch maintains the serving stats:
+    Alongside postings/doclens the batch maintains:
 
-    - layout v2: per-field (n_docs, sum_dl) are measured as OBSERVATION
-      metrics ON the doclens write itself (zero extra jobs) and
-      returned as a stats delta for commit_index_seq to fold into the
-      meta sidecar — no stats/ dataset exists, and BM25's N/avgdl are a
-      sidecar read, not a Spark scan;
-    - layout v1 (legacy): the historical stats/ rows are appended so
-      the pre-r13 invariant (stats/ == per-field sums of all visible
-      doclens rows) keeps holding for old indexes;
+    - the serving stats: per-field (n_docs, sum_dl) are measured as
+      OBSERVATION metrics ON the doclens write itself (zero extra
+      jobs) and returned as a stats delta for commit_index_seq to fold
+      into the meta sidecar — BM25's N/avgdl are a sidecar read, not a
+      Spark scan;
     - termdict/: the batch's distinct (field, token) — the term
       dictionary fuzzy expansion scans (vocabulary-sized, sublinear in
       corpus; Lucene's FST term dict is the same idea).
 
-    ALL artifact writes — postings, doclens, termdict, legacy stats,
-    plus any ``extra_writes`` thunks (docstore tier, upsert
-    tombstones) — read the one eagerly-materialized batch checkpoint
-    (or the raw batch), so they run CONCURRENTLY in a thread pool:
+    ALL artifact writes — postings, doclens, termdict, plus any
+    ``extra_writes`` thunks (docstore tier, upsert tombstones) — read
+    the one eagerly-materialized batch checkpoint (or the raw batch),
+    so they run CONCURRENTLY in a thread pool:
     per-tick wall is the LARGEST write (the postings shuffle), not the
     sum of 5-6 small fixed-overhead Spark jobs (the r12-measured
     per-tick commit-protocol regression; r14 folds the postings write
@@ -912,21 +896,18 @@ def _write_posting_batch(
             os.path.join(root, "postings")
         )
 
-    obs = None
-    lens_w = lens
     fields = list(fields)
-    if layout_v >= 2:
-        obs = Observation()
-        exprs = []
-        for i, f in enumerate(fields):
-            cond = F.col("field") == F.lit(f)
-            exprs.append(F.count(F.when(cond, 1)).alias(f"n{i}"))
-            exprs.append(
-                F.coalesce(
-                    F.sum(F.when(cond, F.col("dl"))), F.lit(0)
-                ).alias(f"s{i}")
-            )
-        lens_w = lens.observe(obs, *exprs)
+    obs = Observation()
+    exprs = []
+    for i, f in enumerate(fields):
+        cond = F.col("field") == F.lit(f)
+        exprs.append(F.count(F.when(cond, 1)).alias(f"n{i}"))
+        exprs.append(
+            F.coalesce(
+                F.sum(F.when(cond, F.col("dl"))), F.lit(0)
+            ).alias(f"s{i}")
+        )
+    lens_w = lens.observe(obs, *exprs)
 
     def w_doclens():
         # no repartition("field"): the doclens dedup aggregation
@@ -943,43 +924,25 @@ def _write_posting_batch(
             os.path.join(root, "doclens")
         )
 
-    def w_stats_legacy():
-        lens.groupBy("field", "seq").agg(
-            F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-        ).select("n_docs", "sum_dl", "seq", "field").repartition(
-            "field"
-        ).write.mode(mode).partitionBy("field").parquet(
-            os.path.join(root, "stats")
-        )
-
     def w_termdict():
-        if layout_v >= 3:
-            # v3: (field, tlen) partition directories — the fuzzy
-            # expansion's length band becomes a partition filter.
-            # tlen is a FUNCTION of token, so computing it before the
-            # distinct changes no cardinality, and the distinct's own
-            # exchange replaces the post-hoc repartition (r15 shape:
-            # distinct shuffle + repartition shuffle = 3 AQE jobs;
-            # now one shuffle = 2). AQE coalesces the vocabulary-delta
-            # sized shuffle to ~1 partition, so a tick still lands ~1
-            # file per touched (field, tlen) directory; the local sort
-            # satisfies the dynamic-partition write ordering.
-            (
-                posts.select("token", "seq", "field")
-                .withColumn("tlen", _tlen_band(F.col("token")))
-                .distinct()
-                .sortWithinPartitions("field", "tlen", "token")
-                .write.mode(mode)
-                .partitionBy("field", "tlen")
-                .parquet(os.path.join(root, "termdict"))
-            )
-        else:
-            td = posts.select("token", "seq", "field").distinct()
-            td.repartition("field").sortWithinPartitions(
-                "field", "token"
-            ).write.mode(mode).partitionBy("field").parquet(
-                os.path.join(root, "termdict")
-            )
+        # (field, tlen) partition directories — the fuzzy expansion's
+        # length band becomes a partition filter. tlen is a FUNCTION of
+        # token, so computing it before the distinct changes no
+        # cardinality, and the distinct's own exchange replaces a
+        # post-hoc repartition (one shuffle = 2 AQE jobs, not 3). AQE
+        # coalesces the vocabulary-delta sized shuffle to ~1
+        # partition, so a tick lands ~1 file per touched (field, tlen)
+        # directory; the local sort satisfies the dynamic-partition
+        # write ordering.
+        (
+            posts.select("token", "seq", "field")
+            .withColumn("tlen", _tlen_band(F.col("token")))
+            .distinct()
+            .sortWithinPartitions("field", "tlen", "token")
+            .write.mode(mode)
+            .partitionBy("field", "tlen")
+            .parquet(os.path.join(root, "termdict"))
+        )
 
     def w_chardict():
         # opt-in pg_trgm-style tier: the batch's distinct terms exploded
@@ -1011,18 +974,14 @@ def _write_posting_batch(
     writes = [w_postings, w_doclens, w_termdict, *extra_writes]
     if char_ngrams:
         writes.append(w_chardict)
-    if layout_v < 2:
-        writes.append(w_stats_legacy)
     with ThreadPoolExecutor(max_workers=len(writes)) as ex:
         for fut in [ex.submit(w) for w in writes]:
             fut.result()
 
-    stats_delta = None
-    if obs is not None:
-        got = obs.get
-        stats_delta = {
-            f: (got[f"n{i}"], got[f"s{i}"]) for i, f in enumerate(fields)
-        }
+    got = obs.get
+    stats_delta = {
+        f: (got[f"n{i}"], got[f"s{i}"]) for i, f in enumerate(fields)
+    }
     # the batch checkpoint fed all writes — release its blocks, or a
     # long-running CDC driver leaks one batch-sized block set per tick
     free_local_checkpoint(posts)
@@ -1333,8 +1292,9 @@ def build_posting_index(
     """Persist the serving search index: `postings/` PARTITIONED BY
     (field, token-bucket) — a term query prunes to one bucket directory
     before any file opens — plus `doclens/` (BM25 length
-    normalization), `stats/` (corpus statistics) and `termdict/` (the
-    term dictionary), all PARTITIONED BY field. Analyzer runs ONCE, at
+    normalization, PARTITIONED BY field) and `termdict/` (the term
+    dictionary, PARTITIONED BY field and length band); the per-field
+    corpus statistics go into the meta sidecar. Analyzer runs ONCE, at
     ingest (or earlier: pass ``tokens_col`` to build from a persisted
     analyzed stream, see _posting_partials).
 
@@ -1535,7 +1495,7 @@ def _tick_store_cols(
     cols = (meta or {}).get("store_cols")
     if requested is not None:
         requested = list(requested)
-        if meta is not None and cols != requested:
+        if meta is not None and "store_cols" in meta and cols != requested:
             raise ValueError(
                 f"index at {path} stores fields {cols}; the tick asks "
                 f"for {requested} — rebuild to change stored fields"
@@ -1553,43 +1513,20 @@ def _tick_store_cols(
 
 
 def _tick_defaults(
-    meta: dict | None,
-    path: str,
-    fields: tuple[str, ...],
-    stem: bool,
-    store_cols,
+    fields: tuple[str, ...], stem: bool, store_cols
 ) -> dict:
     """The meta document a tick would ESTABLISH on a fresh path —
     setdefault-merged by alloc_index_seqs, so an existing sidecar's
-    config always wins. Computed from the pre-alloc snapshot (cheap);
-    the tick then re-reads the authoritative sidecar UNDER the lease
-    and derives its actual layout/store config from that, because the
-    snapshot can be stale (r14 advice #1: two first-tick racers both
-    see meta=None).
-
-    meta absent: only a genuinely FRESH path takes the current layout
-    — a pre-meta legacy index (postings exist, no sidecar) must keep
-    writing dl-less v1 rows or the dataset schema-splits and the v2
-    serve reads NULL dl for legacy docs."""
-    if meta is not None:
-        layout_v = meta.get("layout_v", 1)
-        n_buckets = meta.get("n_buckets", N_TOKEN_BUCKETS)
-        n_store = meta.get("n_store_buckets", N_STORE_BUCKETS)
-        cols = meta.get("store_cols") or (
-            list(store_cols) if store_cols else None
-        )
-    else:
-        legacy = os.path.isdir(os.path.join(path, "postings"))
-        layout_v = 1 if legacy else LAYOUT_V
-        n_buckets, n_store = N_TOKEN_BUCKETS, N_STORE_BUCKETS
-        cols = list(store_cols) if store_cols else None
+    config always wins. The tick then re-reads the authoritative
+    sidecar UNDER the lease and derives its actual store config from
+    that (r14 advice #1: two first-tick racers both see meta=None)."""
     return {
         "stem": stem,
         "fields": list(fields),
-        "n_buckets": int(n_buckets),
-        "store_cols": cols,
-        "n_store_buckets": int(n_store),
-        "layout_v": layout_v,
+        "n_buckets": N_TOKEN_BUCKETS,
+        "store_cols": list(store_cols) if store_cols else None,
+        "n_store_buckets": N_STORE_BUCKETS,
+        "layout_v": LAYOUT_V,
         "element_fields": [],
     }
 
@@ -1603,7 +1540,7 @@ def append_posting_index(
     tokens_col=None,
     store_cols: tuple[str, ...] | None = None,
 ) -> None:
-    """Tick upkeep: append ONE batch's posting + doclen + stats rows —
+    """Tick upkeep: append ONE batch's posting + doclen + termdict rows —
     O(batch) analyze/explode/agg, no corpus re-analysis, no index
     rewrite, published by one atomic commit (a crash mid-tick serves
     the pre-tick view; a re-delivered batch lands under fresh seqs
@@ -1611,22 +1548,20 @@ def append_posting_index(
     double-counts tf). Contract (same as the minhash/shingle indexes):
     batches are disjoint in doc_id — a CHANGED doc retires its old
     rows via upsert_posting_index. A tick whose ``stem``/``fields``
-    disagree with the index's persisted config raises before writing.
-    On a path with no meta (first CDC tick) the call establishes the
-    index config."""
+    disagree with the index's persisted config, or an index in another
+    format, raises before writing. On a path with no meta (first CDC
+    tick) the call establishes the index config."""
     mpath = _posting_meta_path(path)
     requested_store = store_cols
     meta = _load_meta(mpath)
+    _check_format(path, meta)
     # fast-fail a visibly mismatched tick before taking the lease
     # (re-validated against the AUTHORITATIVE sidecar below)
     if meta is not None:
         _validate_tick_config(meta, fields, stem, tokens_col, path)
     _tick_store_cols(meta, new_docs, path, requested=requested_store)
     seq = alloc_index_seqs(
-        mpath,
-        1,
-        defaults=_tick_defaults(meta, path, fields, stem, requested_store),
-        legacy_probe=("postings", "_tombstones"),
+        mpath, 1, defaults=_tick_defaults(fields, stem, requested_store)
     )
     with _release_lease_on_error(mpath), _lease_heartbeats(mpath):
         # config comes from the sidecar as it stands UNDER our claim —
@@ -1638,13 +1573,10 @@ def append_posting_index(
         )
         n_buckets = meta.get("n_buckets", N_TOKEN_BUCKETS)
         n_store = meta.get("n_store_buckets", N_STORE_BUCKETS)
-        # a tick writes the LAYOUT the index was built with: mixing
-        # dl-on-posting rows into a v1 index would schema-split it
-        layout_v = meta.get("layout_v", 1)
         root = _gen_root(path, meta)
         posts, lens = _posting_partials(
             new_docs, fields, id_col, stem, tokens_col, seq=seq,
-            n_buckets=n_buckets, with_dl=layout_v >= 2,
+            n_buckets=n_buckets,
         )
         extra = ()
         if store_cols:
@@ -1656,9 +1588,9 @@ def append_posting_index(
             )
         stats_delta = _write_posting_batch(
             posts, lens, path, "append", dest_root=root, fields=fields,
-            layout_v=layout_v, extra_writes=extra,
-            char_ngrams=(meta or {}).get("char_ngrams"),
-            char_fields=tuple((meta or {}).get("char_fields") or ()) or None,
+            extra_writes=extra,
+            char_ngrams=meta.get("char_ngrams"),
+            char_fields=tuple(meta.get("char_fields") or ()) or None,
         )
         commit_index_seq(mpath, seq, stats_delta=stats_delta)
 
@@ -1672,7 +1604,8 @@ def _apply_tombstones(
     path: str,
     df: DataFrame,
     key: str = "doc_id",
-    meta: dict | None = None,
+    *,
+    meta: dict,
 ) -> DataFrame:
     """Exclude dead rows: a row is live iff no tombstone exists for its
     key, or it was written AFTER the key's latest tombstone (seq
@@ -1686,9 +1619,8 @@ def _apply_tombstones(
     docs), and an unconditional broadcast there is an OOM, not a
     slowdown; past the gate the liveness filter becomes a plain join
     (AQE picks the strategy). ``meta`` applies the commit-watermark
-    visibility to BOTH sides (None = legacy full visibility). Shared
-    by the posting index (key=doc_id) and the IVF-PQ vector index
-    (key=vec_id, operators/similarity.py)."""
+    visibility to BOTH sides. Shared by the posting index (key=doc_id)
+    and the IVF-PQ vector index (key=vec_id, operators/similarity.py)."""
     tpath = _art(path, "_tombstones", meta)
     df = _visible(df, meta)
     if not os.path.exists(tpath):
@@ -1758,34 +1690,30 @@ def read_termdict(
     tick appends ITS batch's distinct terms, so the raw table holds one
     row per (field, token, tick-that-saw-it); the reader re-distincts.
     A term whose last doc was tombstoned may linger until compaction —
-    harmless: its pruned postings contribute no rows. Legacy indexes
-    (no termdict/ artifact) derive it from the postings once.
+    harmless: its pruned postings contribute no rows.
 
     ``fields`` prunes to those partition directories;
     ``length_between`` pushes a (lo, hi) token-length band BEFORE the
     distinct — fuzzy expansion only ever matches tokens within
-    max_edits of a query term's length. On layout-v3 indexes the band
-    is a PARTITION FILTER on the tlen directories (the expansion reads
-    only candidate bands — never the field's whole vocabulary, the r13
-    verdict's last unpruned serve read); v1/v2 termdicts fall back to
-    the post-read length filter, which still cuts the distinct shuffle
-    from vocabulary-sized to band-sized."""
+    max_edits of a query term's length. The band is a PARTITION FILTER
+    on the tlen directories (the expansion reads only candidate bands —
+    never the field's whole vocabulary), plus the exact length filter
+    inside the shared capped band."""
     meta = read_posting_meta(path)
-    tdir = _art(path, "termdict", meta)
-    if not os.path.isdir(tdir):
-        td = read_postings(spark, path).select("field", "token")
-    else:
-        td = _visible(_read_or_empty(spark, tdir, TERMDICT_SCHEMA), meta)
+    td = _visible(
+        _read_or_empty(spark, _art(path, "termdict", meta), TERMDICT_SCHEMA),
+        meta,
+    )
     if fields is not None:
         td = td.filter(F.col("field").isin(list(fields)))
     if length_between is not None:
         lo, hi = length_between
-        if meta.get("layout_v", 1) >= 3 and "tlen" in td.columns:
-            bands = tlen_bands(lo, hi)
-            if not bands:
-                return td.select("field", "token").limit(0)
-            td = td.filter(F.col("tlen").isin(bands))
-        td = td.filter(F.length("token").between(int(lo), int(hi)))
+        bands = tlen_bands(lo, hi)
+        if not bands:
+            return td.select("field", "token").limit(0)
+        td = td.filter(F.col("tlen").isin(bands)).filter(
+            F.length("token").between(int(lo), int(hi))
+        )
     return td.select("field", "token").distinct()
 
 
@@ -1794,8 +1722,8 @@ def index_stats(spark: SparkSession, path: str) -> DataFrame:
     BM25's N and avgdl served WITHOUT aggregating the O(corpus) doclens
     table per query (the r11 verdict's serving flag). Cost model:
 
-    - base: v2 — a pure meta-sidecar read (zero Spark scans); v1 — SUM
-      over stats/ (one slim row per field per tick);
+    - base: the meta sidecar's ``field_stats`` — a pure metadata read,
+      zero Spark scans;
     - dead correction: only when tombstones exist — subtract the
       tombstoned doc versions' doclens rows, found via a broadcast join
       against the churn-bounded tombstone key set. Zero tombstones
@@ -1806,36 +1734,19 @@ def index_stats(spark: SparkSession, path: str) -> DataFrame:
       push large In lists to parquet row-group filters anyway, so the
       broadcast join is the right shape at every churn size.)
 
-    Invariant maintained by every writer: stats/ equals the per-field
-    sums of ALL visible doclens rows on disk (live + dead) — appends
-    add both together under one commit; the tiered pass folds doclens
-    FILES without dropping dead rows; the full compaction drops dead
-    rows and recomputes stats/ inside one atomic swap."""
+    Invariant maintained by every writer: ``field_stats`` equals the
+    per-field sums of ALL visible doclens rows on disk (live + dead) —
+    a tick adds both together under one commit; the tiered pass folds
+    doclens FILES without dropping dead rows; the full compaction drops
+    dead rows and recomputes ``field_stats`` inside one atomic swap."""
     meta = read_posting_meta(path)
-    sdir = _art(path, "stats", meta)
-    if meta.get("field_stats") is not None:
-        # layout v2: the per-field sums live in the meta sidecar,
-        # folded in atomically at each commit — the base is a pure
-        # metadata read, zero Spark scans on the serve path
-        base = spark.createDataFrame(
-            [(f, int(n), int(s)) for f, (n, s) in meta["field_stats"].items()],
-            "field string, n_docs long, sum_dl long",
-        )
-    elif not os.path.isdir(sdir):
-        # legacy index (pre-stats artifact): the historical full-doclens
-        # aggregate, kept only for indexes built before r12
-        return read_doclens(spark, path).groupBy("field").agg(
-            F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-        )
-    else:
-        base = (
-            _visible(_read_or_empty(spark, sdir, STATS_SCHEMA), meta)
-            .groupBy("field")
-            .agg(
-                F.sum("n_docs").alias("n_docs"),
-                F.sum("sum_dl").alias("sum_dl"),
-            )
-        )
+    base = spark.createDataFrame(
+        [
+            (f, int(n), int(s))
+            for f, (n, s) in (meta["field_stats"] or {}).items()
+        ],
+        "field string, n_docs long, sum_dl long",
+    )
     tpath = _art(path, "_tombstones", meta)
     if not os.path.exists(tpath):
         return base
@@ -1867,7 +1778,7 @@ def index_stats(spark: SparkSession, path: str) -> DataFrame:
 
 def index_field_stats(spark: SparkSession, path: str, field: str) -> DataFrame:
     """One-row (n_docs, avgdl) for a field — the broadcast side of the
-    BM25 serving score. try_divide: an EMPTY field (v2 meta stats keep
+    BM25 serving score. try_divide: an EMPTY field (the meta stats keep
     a (0, 0) row per declared field) yields NULL avgdl instead of an
     ANSI divide-by-zero — the scorer's candidate set is empty there
     anyway."""
@@ -1885,20 +1796,26 @@ def delete_from_posting_index(
     seq) tombstones under their own committed seq; every reader
     (df / BM25 / phrase / stats) excludes rows at or below a doc's
     latest tombstone, and the compaction passes apply tombstones
-    physically. O(|deletes|) — the index is never scanned."""
+    physically. O(|deletes|) — the index is never scanned. On a fresh
+    path the delete only creates the sidecar, stamped with LAYOUT_V (no
+    doc exists to retire), so the first tick after it writes the one
+    format and serves without the dead correction."""
     mpath = _posting_meta_path(path)
-    seq = alloc_index_seqs(
-        mpath, 1, legacy_probe=("postings", "_tombstones")
-    )
+    _check_format(path, _load_meta(mpath))
+    seq = alloc_index_seqs(mpath, 1, defaults={"layout_v": LAYOUT_V})
     # doc_id keeps the caller's key type (long testdata ids, the
     # reference's UUID strings) — the liveness join must type-match the
     # postings' doc_id
     with _release_lease_on_error(mpath), _lease_heartbeats(mpath):
         root = _gen_root(path, _load_meta(mpath))
-        doc_ids.select(
-            F.col(id_col).alias("doc_id"),
-            F.lit(int(seq)).cast("long").alias("seq"),
-        ).write.mode("append").parquet(os.path.join(root, "_tombstones"))
+        # with no postings yet there is no doc version to retire: a
+        # tombstone here would only put the dead-correction join on
+        # every serve until the next full compaction
+        if os.path.isdir(os.path.join(root, "postings")):
+            doc_ids.select(
+                F.col(id_col).alias("doc_id"),
+                F.lit(int(seq)).cast("long").alias("seq"),
+            ).write.mode("append").parquet(os.path.join(root, "_tombstones"))
         commit_index_seq(mpath, seq)
 
 
@@ -1919,23 +1836,19 @@ def upsert_posting_index(
     tombstones and the re-added rows (one seq apart, counter order)
     publish under a SINGLE commit — a reader never sees the doc
     deleted-but-not-re-added, and a crash anywhere mid-upsert serves
-    the pre-tick view. Config validation runs before anything is
-    written (a rejected upsert is a clean no-op)."""
+    the pre-tick view. Config and format validation run before
+    anything is written (a rejected upsert is a clean no-op)."""
     mpath = _posting_meta_path(path)
     requested_store = store_cols
     meta = _load_meta(mpath)
+    _check_format(path, meta)
     # fast-fail a visibly mismatched tick before taking the lease
     # (re-validated against the AUTHORITATIVE sidecar below)
     if meta is not None:
         _validate_tick_config(meta, fields, stem, tokens_col, path)
     _tick_store_cols(meta, new_docs, path, requested=requested_store)
     seq_t = alloc_index_seqs(
-        mpath,
-        2,
-        defaults=_tick_defaults(
-            meta, path, fields, stem, requested_store
-        ),
-        legacy_probe=("postings", "_tombstones"),
+        mpath, 2, defaults=_tick_defaults(fields, stem, requested_store)
     )
     seq_a = seq_t + 1
     with _release_lease_on_error(mpath), _lease_heartbeats(mpath):
@@ -1943,10 +1856,10 @@ def upsert_posting_index(
         # stands under our claim (r14 advice #1): the pre-alloc
         # snapshot is a TOCTOU — two processes racing the first tick
         # both see meta=None, and the loser re-allocates only after
-        # the winner commits. Deciding layout/store/freshness from
-        # the stale snapshot would skip a tombstone that matters
-        # (two live versions of any doc in both batches), write
-        # wrong-layout rows, or drop the winner's stored tier.
+        # the winner commits. Deciding store/freshness from the stale
+        # snapshot would skip a tombstone that matters (two live
+        # versions of any doc in both batches) or drop the winner's
+        # stored tier.
         meta = _load_meta(mpath) or {}
         _validate_tick_config(meta, fields, stem, tokens_col, path)
         store_cols = _tick_store_cols(
@@ -1954,21 +1867,17 @@ def upsert_posting_index(
         )
         n_buckets = meta.get("n_buckets", N_TOKEN_BUCKETS)
         n_store = meta.get("n_store_buckets", N_STORE_BUCKETS)
-        layout_v = meta.get("layout_v", 1)
         # a genuinely FRESH path (the first CDC/streaming tick) has no
         # older doc versions for tombstones to retire: skip the write
         # — one less per-tick job, and the serving dead-correction
-        # join stays off until real churn exists. Fresh iff this claim
-        # drew the counter's very first seqs (seq_t == 1 — the counter
-        # started at 0 under OUR claim, so no earlier tick can have
-        # committed) and postings/ is still absent.
+        # join stays off until real churn exists. Fresh iff postings/
+        # is still absent under OUR claim: every tick that indexed a
+        # doc wrote it, and only a delete can have committed before.
         root = _gen_root(path, meta)
-        fresh = seq_t == 1 and not os.path.isdir(
-            os.path.join(root, "postings")
-        )
+        fresh = not os.path.isdir(os.path.join(root, "postings"))
         posts, lens = _posting_partials(
             new_docs, fields, id_col, stem, tokens_col, seq=seq_a,
-            n_buckets=n_buckets, with_dl=layout_v >= 2,
+            n_buckets=n_buckets,
         )
 
         def w_tombstones():
@@ -1991,9 +1900,9 @@ def upsert_posting_index(
             )
         stats_delta = _write_posting_batch(
             posts, lens, path, "append", dest_root=root, fields=fields,
-            layout_v=layout_v, extra_writes=extra,
-            char_ngrams=(meta or {}).get("char_ngrams"),
-            char_fields=tuple((meta or {}).get("char_fields") or ()) or None,
+            extra_writes=extra,
+            char_ngrams=meta.get("char_ngrams"),
+            char_fields=tuple(meta.get("char_fields") or ()) or None,
         )
         commit_index_seq(mpath, seq_a, stats_delta=stats_delta)
 
@@ -2109,9 +2018,9 @@ def compact_posting_index(spark: SparkSession, path: str) -> None:
     """FULL compaction: fold the per-tick small files into one file-set
     per partition, apply tombstones physically (Lucene's segment merge:
     dead doc versions leave the data files; the tombstone set resets to
-    empty), recompute stats/ and termdict/ from the live rows, and
-    clear dead_ranges. Periodic maintenance, not correctness — readers
-    already serve the live view.
+    empty), recompute the meta's field_stats and termdict/ from the
+    live rows, and clear dead_ranges. Periodic maintenance, not
+    correctness — readers already serve the live view.
 
     Staged through a sibling temp dir + two renames (the
     compact_ivfpq_index / writers.compact_parquet discipline) instead
@@ -2130,9 +2039,7 @@ def compact_posting_index(spark: SparkSession, path: str) -> None:
     tiered pass's staging debris (_recover_folds — without it a leaf
     whose swap was cut between renames would be silently absent from
     the rewrite and its only committed copy deleted with the old
-    generation). Also MIGRATES v1 indexes to layout v2: dl is
-    recomputed onto every posting row and the per-field stats fold
-    into the meta sidecar (the stats/ dataset is retired).
+    generation).
 
     A daemon heartbeat covers the WHOLE pass (r14 what's-wrong #2):
     the per-stage beats below refresh between Spark jobs, but a single
@@ -2153,16 +2060,8 @@ def _compact_posting_locked(spark: SparkSession, path: str) -> None:
     _recover_folds(path)
     _heartbeat_writer_lease(mpath)
     meta = read_posting_meta(path)
-    committed = int(meta.get("committed_seq") or 0)
-    posts = read_postings(spark, path)
-    if "dl" not in posts.columns:
-        # v1 → v2 migration: the live rows gain dl here, once
-        from pyspark.sql import Window
-
-        posts = posts.withColumn(
-            "dl", F.sum("tf").over(Window.partitionBy("field", "doc_id"))
-        )
-    posts = posts.localCheckpoint(eager=True)
+    committed = int(meta["committed_seq"])
+    posts = read_postings(spark, path).localCheckpoint(eager=True)
     lens = read_doclens(spark, path).localCheckpoint(eager=True)
     store = get_metastore()
     if store.supports_rename:
@@ -2243,12 +2142,7 @@ def _compact_posting_locked(spark: SparkSession, path: str) -> None:
     free_local_checkpoint(posts)
     free_local_checkpoint(lens)
     _heartbeat_writer_lease(mpath)
-    folded = {
-        **meta,
-        "dead_ranges": [],
-        "layout_v": LAYOUT_V,
-        "field_stats": field_stats,
-    }
+    folded = {**meta, "dead_ranges": [], "field_stats": field_stats}
     if not store.supports_rename:
         # the SWAP is one CAS of the generation pointer: readers
         # resolve the complete new generation or the complete old one,
@@ -2415,9 +2309,8 @@ def compact_posting_index_tiered(
     - postings leaves drop dead + orphan rows and re-sort by token
       (restoring row-group skipping on long-lived hot buckets);
     - doclens leaves fold FILES ONLY — dead rows are kept because the
-      stats/ invariant (index_stats docstring) needs them until a full
-      compaction retires both sides atomically;
-    - stats leaves fold to one row per field;
+      field_stats invariant (index_stats docstring) needs them until a
+      full compaction retires both sides atomically;
     - termdict leaves fold to distinct terms;
     - the tombstone set folds to one row per key, bounding the
       liveness broadcast by distinct churned keys rather than
@@ -2452,7 +2345,7 @@ def _compact_tiered_locked(
     spark: SparkSession, path: str, max_files: int
 ) -> None:
     meta = read_posting_meta(path)
-    committed = int(meta.get("committed_seq") or 0)
+    committed = int(meta["committed_seq"])
 
     # crash debris from a previous tiered pass: restore any leaf whose
     # swap was cut between its two renames (the old rows are the only
@@ -2473,15 +2366,6 @@ def _compact_tiered_locked(
         _swap_leaf(
             _visible(spark.read.parquet(leaf), meta), leaf, path, ("doc_id",)
         )
-    for leaf in _leaf_partition_dirs(os.path.join(path, "stats")):
-        if len(_leaf_parquet_files(leaf)) <= max_files:
-            continue
-        folded = (
-            _visible(spark.read.parquet(leaf), meta)
-            .agg(F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl"))
-            .select("n_docs", "sum_dl", F.lit(committed).cast("long").alias("seq"))
-        )
-        _swap_leaf(folded, leaf, path, ())
     for leaf in _leaf_partition_dirs(os.path.join(path, "termdict")):
         if len(_leaf_parquet_files(leaf)) <= max_files:
             continue
@@ -2562,9 +2446,8 @@ def posting_index_cached(
         os.path.abspath(src), _analyzer_version(), id_col, text_col,
         ",".join(extra_fields), f"nb={n_buckets}", f"stem={stem}",
         f"trgm={char_ngrams}", f"raw={raw_field or ''}",
-        # layout generation rides the cache identity: an r12-built (v1)
-        # cached index must not satisfy a v2 build request — it would
-        # silently serve through the legacy doclens-join path
+        # the layout version rides the cache identity: a cached index
+        # in another format is never reused (readers reject it)
         f"store={','.join(store_cols or ())}", f"posting-v{LAYOUT_V}",
     ]
     for p in parts:

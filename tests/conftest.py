@@ -99,7 +99,6 @@ FULL_ONLY = {
     "test_index_commits.py::test_multifield_index_serves_multimatch_bm25",
     "test_index_commits.py::test_tiered_compaction_folds_hot_partition_only",
     "test_index_v2.py::test_element_field_refuses_phrase_and_dsl_falls_back",
-    "test_index_v2.py::test_v1_layout_still_serves_and_migrates",
     "test_metastore_norename.py::test_norename_crash_before_pointer_publish_serves_old_view",
     "test_metastore_norename.py::test_norename_full_compaction_is_a_pointer_swap",
     "test_metastore_norename.py::test_norename_icontains_and_docstore_serve_after_swap",

@@ -224,12 +224,23 @@ def test_all_stopword_match_matches_nothing(spark, corpus, index_path):
     assert resp["hits"]["total"]["value"] == 0
 
 
-def test_unindexed_field_falls_back(spark, corpus, index_path):
+def test_unindexed_field_falls_back(spark, corpus, index_path, caplog):
+    import logging
+
     body = {"query": {"match": {"lang": "en"}}, "size": 20}
     meta = read_posting_meta(index_path)
     cands, residual = _index_candidates(spark, index_path, body["query"], meta)
     assert cands is None and residual == body["query"]
+    caplog.set_level(
+        logging.DEBUG,
+        logger="djangoadmin_postgresql_2_elasticseach_spark.search.dsl",
+    )
     assert_parity(spark, corpus, body, index_path)
+    # the fallback to the corpus scan says why, at DEBUG
+    assert any(
+        "no index-servable full-text leaf" in r.getMessage()
+        for r in caplog.records
+    )
 
 
 def test_aggregations_run_over_index_pruned_frame(spark, corpus, index_path):
@@ -512,11 +523,10 @@ def wide(spark, tmp_path_factory):
         # counted before the cursor filter
         ({"query": SHUFFLE, "sort": [{"n_chars": "asc"}],
           "search_after": [110, 10], "size": 3}, 20, 3),
-        # a null cursor: the optimizer proves the page empty and drops
-        # the observation with it — the total must survive (its page is
-        # not pinned)
+        # a null cursor: ascending sorts put nulls first, so every
+        # non-null row follows it
         ({"query": SHUFFLE, "sort": [{"n_chars": "asc"}],
-          "search_after": [None, 10], "size": 3}, 20, None),
+          "search_after": [None, 10], "size": 3}, 20, 3),
         # a scored frame, ranked only by the page's top-k
         ({"query": {"multi_match": {"query": "shufle", "fields": ["text"],
                                     "fuzziness": "auto"}}, "size": 3}, 20, 3),
@@ -546,6 +556,41 @@ def test_total_equals_independent_count(
     assert resp["hits"]["total"]["value"] == want_total
     if want_hits is not None:
         assert len(resp["hits"]["hits"]) == want_hits
+
+
+@pytest.mark.parametrize("served", ["scan", "index"])
+@pytest.mark.parametrize("order", ["asc", "desc"])
+def test_search_after_walks_past_null_sort_values(spark, wide, served, order):
+    """Keyset pagination over a sort field holding nulls and ties:
+    walking every page by search_after, each cursor taken from the last
+    hit's `sort` values, sees each hit exactly once and in the page
+    sort's null order (nulls first ascending, last descending)."""
+    docs, path = wide
+    docs = docs.withColumn(
+        "n_chars",
+        F.when(F.col("doc_id") % 4 != 1, F.col("n_chars") % 7),
+    )
+
+    def run(body):
+        if served == "index":
+            return search_indexed(spark, docs, body, path, id_col="doc_id")
+        return search(docs, body, id_col="doc_id")
+
+    body = {"query": SHUFFLE, "sort": [{"n_chars": order}], "size": 4}
+    full = run({**body, "size": 40})["hits"]["hits"]
+    # 10 of the 20 hits hold a null sort value
+    assert len(full) == 20
+    assert sum(h["sort"][0] is None for h in full) == 10
+    seen, cursor = [], None
+    for _ in range(10):
+        hits = run({**body, "search_after": cursor} if cursor else body)[
+            "hits"
+        ]["hits"]
+        if not hits:
+            break
+        seen += [h["_id"] for h in hits]
+        cursor = hits[-1]["sort"]
+    assert seen == [h["_id"] for h in full]
 
 
 def test_match_response_spark_job_budget(spark, wide):

@@ -269,6 +269,24 @@ def test_auto_falls_back_on_every_precondition(
         assert not any((path or "\x00") in f for f in df.inputFiles())
 
 
+def test_auto_fallback_logs_its_reason(spark, docs, auto_idx, caplog):
+    """A fallback to the scan is silent to callers but not invisible:
+    the dispatcher logs the failed precondition at DEBUG (here, a
+    fragment inside the stopword "the")."""
+    import logging
+
+    caplog.set_level(
+        logging.DEBUG,
+        logger="djangoadmin_postgresql_2_elasticseach_spark.operators.api",
+    )
+    _auto(spark, docs, "th", auto_idx)
+    assert any(
+        "falls back to the scan" in r.getMessage()
+        and "stopword" in r.getMessage()
+        for r in caplog.records
+    )
+
+
 def test_film_detail_dispatches_pk_lookup(spark, tmp_path):
     """film_detail with an id-indexed path resolves the pk fragment via
     the index (broadcast semi-join on exact candidate ids) and returns

@@ -1,12 +1,11 @@
 """r12 posting/IVF-PQ index hardening: persisted layout params, the
 monotonic-counter commit protocol (atomic ticks, clock independence,
-crash + re-delivery semantics), the BM25 serving-stats artifact, token-
+crash + re-delivery semantics), the BM25 serving stats, token-
 sorted row groups, tiered compaction, and the multi-field index with
 dictionary-expanded fuzzy multi_match serving."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -301,45 +300,6 @@ def test_upsert_survives_backwards_clock(spark, tmp_path, monkeypatch):
     assert got == {("text", b): 1, ("text", c): 2}
 
 
-def test_legacy_index_bridges_to_counter(spark, tmp_path):
-    """A pre-r12 index (wall-clock seqs, no counter in the meta) keeps
-    serving and accepts counter-era ticks: the first allocation starts
-    the counter ABOVE the clock so ordering across the migration
-    boundary holds."""
-    from djangoadmin_postgresql_2_elasticseach_spark.search.query import (
-        analyze_query,
-    )
-
-    a, b, c = analyze_query("alpha beta gamma")
-
-    def mk(rows):
-        return spark.createDataFrame(rows, "doc_id long, tokens array<string>")
-
-    path = str(tmp_path / "idx")
-    build_posting_index(mk([(1, [a, b]), (2, [b, c])]), path,
-                        tokens_col="tokens")
-    # strip the r12 keys + stamp legacy wall-clock-style seqs, exactly
-    # the r11 on-disk state
-    mpath = IX._posting_meta_path(path)
-    with open(mpath, encoding="utf-8") as fh:
-        meta = json.load(fh)
-    for k in ("next_seq", "committed_seq", "dead_ranges"):
-        meta.pop(k, None)
-    with open(mpath, "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-
-    assert _df_map(spark, path) == {
-        ("text", a): 1, ("text", b): 2, ("text", c): 1,
-    }
-    upsert_posting_index(mk([(2, [a])]), path, tokens_col="tokens")
-    append_posting_index(mk([(3, [c])]), path, tokens_col="tokens")
-    assert _df_map(spark, path) == {
-        ("text", a): 2, ("text", b): 1, ("text", c): 1,
-    }
-    m = read_posting_meta(path)
-    assert m["committed_seq"] == m["next_seq"] > 10**18
-
-
 def test_upsert_rejects_bad_config_as_clean_noop(spark, tmp_path):
     """r11 advice: a stem-mismatched upsert used to tombstone the batch
     FIRST and then raise — the docs silently vanished. Validation now
@@ -365,12 +325,12 @@ def test_upsert_rejects_bad_config_as_clean_noop(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# BM25 serving stats artifact (verdict next-step #2)
+# BM25 serving stats (verdict next-step #2)
 # ---------------------------------------------------------------------------
 
 
 def test_index_stats_tracks_live_corpus(spark, toks, tmp_path):
-    """(field, n_docs, sum_dl) from the stats artifact must equal the
+    """(field, n_docs, sum_dl) from the meta's field stats must equal the
     live doclens aggregate through build, ticks, upserts and deletes —
     and survive both compaction modes."""
     from djangoadmin_postgresql_2_elasticseach_spark.search.index import (
@@ -416,8 +376,8 @@ def test_index_stats_tracks_live_corpus(spark, toks, tmp_path):
 def test_bm25_serving_plan_has_no_doclens_aggregate(spark, toks, tmp_path):
     """Plan pin for the r11 verdict flag: the serving path must not
     aggregate the O(corpus) doclens table per query — N/avgdl come from
-    the stats artifact (no avg(dl) anywhere in the plan), dl joins for
-    candidate docs only."""
+    the meta's field stats (no avg(dl) anywhere in the plan), dl from
+    the candidates' own posting rows."""
     path = str(tmp_path / "idx")
     build_posting_index(toks, path, tokens_col="tokens")
     df = bm25_topk_from_index(spark, path, "spark vector join", k=10)

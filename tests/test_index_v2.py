@@ -1,15 +1,16 @@
-"""r13 index-layout v2: dl carried on every posting row (the Lucene
-norms-with-postings posture — no doclens table anywhere in a BM25
-serve plan), per-field corpus stats in the meta sidecar (folded in
-atomically at commit), v1→v2 migration via full compaction, the
-threshold-gated tombstone broadcast, the single-writer lease, and the
-element-field phrase contract."""
+"""The posting-index format: dl carried on every posting row (the
+Lucene norms-with-postings posture — no doclens table anywhere in a
+BM25 serve plan), per-field corpus stats in the meta sidecar (folded
+in atomically at commit), length-band termdict partitions, the
+rejection of every other on-disk format, the threshold-gated tombstone
+broadcast, the single-writer lease, and the element-field phrase
+contract."""
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,13 +20,11 @@ from djangoadmin_postgresql_2_elasticseach_spark.search import index as IX
 from djangoadmin_postgresql_2_elasticseach_spark.search.bm25 import (
     bm25_topk,
     bm25_topk_from_index,
-    multi_match_bm25,
     multimatch_bm25_from_index,
 )
 from djangoadmin_postgresql_2_elasticseach_spark.search.index import (
     append_posting_index,
     build_posting_index,
-    compact_posting_index,
     delete_from_posting_index,
     read_posting_meta,
     upsert_posting_index,
@@ -69,43 +68,6 @@ def _topk(df):
     return [(r[0], r[1]) for r in df.collect()]
 
 
-def _doctor_to_v1(spark, path):
-    """Rewrite a freshly-built index into the pre-r13 on-disk layout:
-    drop the dl posting column, restore the stats/ dataset, flatten
-    the termdict back to field-only partitioning (pre-r14), and stamp
-    the meta layout_v=1 — a faithful v1 index for exercising the
-    legacy serve path and the migration."""
-    posts = spark.read.parquet(os.path.join(path, "postings")).drop("dl")
-    tmp = os.path.join(path, "postings.v1")
-    posts.repartition("field", "tkb").write.mode("overwrite").partitionBy(
-        "field", "tkb"
-    ).parquet(tmp)
-    shutil.rmtree(os.path.join(path, "postings"))
-    os.rename(tmp, os.path.join(path, "postings"))
-    td = spark.read.parquet(os.path.join(path, "termdict")).drop("tlen")
-    tmp = os.path.join(path, "termdict.v1")
-    td.repartition("field").write.mode("overwrite").partitionBy(
-        "field"
-    ).parquet(tmp)
-    shutil.rmtree(os.path.join(path, "termdict"))
-    os.rename(tmp, os.path.join(path, "termdict"))
-    lens = spark.read.parquet(os.path.join(path, "doclens"))
-    lens.groupBy("field", "seq").agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-    ).select("n_docs", "sum_dl", "seq", "field").repartition(
-        "field"
-    ).write.mode("overwrite").partitionBy("field").parquet(
-        os.path.join(path, "stats")
-    )
-    mpath = os.path.join(path, "_index_meta.json")
-    with open(mpath, encoding="utf-8") as fh:
-        meta = json.load(fh)
-    meta["layout_v"] = 1
-    meta.pop("field_stats", None)
-    with open(mpath, "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-
-
 # ---------------------------------------------------------------------------
 # dl on the posting row: serve plans carry NO doclens scan (r12 verdict
 # top task — the docstring's "candidate docs only" claim held for rows
@@ -116,7 +78,7 @@ def _doctor_to_v1(spark, path):
 def test_v2_bm25_serve_plan_reads_no_doclens(spark, toks, tmp_path):
     path = str(tmp_path / "idx")
     build_posting_index(toks, path, tokens_col={"text": "tokens"})
-    assert read_posting_meta(path)["layout_v"] >= 2
+    assert read_posting_meta(path)["layout_v"] == IX.LAYOUT_V
     df = bm25_topk_from_index(spark, path, QUERY, k=10)
     assert not _reads(df, "doclens")
     # N/avgdl come from the meta sidecar, not a stats/ dataset scan
@@ -165,48 +127,97 @@ def test_v2_serve_parity_through_ticks(spark, toks, tmp_path):
     assert _topk(bm25_topk_from_index(spark, path, QUERY, k=10)) == _topk(
         bm25_topk(live, QUERY, k=10)
     )
-    # v2 ticks never launch the stats-dataset write job (the r12
-    # per-tick fixed-cost item): the stats live in the meta sidecar
+    # ticks never launch a stats-dataset write job (the r12 per-tick
+    # fixed-cost item): the stats live in the meta sidecar
     assert not os.path.isdir(os.path.join(path, "stats"))
     assert read_posting_meta(path)["field_stats"]
 
 
 # ---------------------------------------------------------------------------
-# v1 legacy path + full-compaction migration
+# one format: every writer stamps it, every other format is rejected
 # ---------------------------------------------------------------------------
 
 
-def test_v1_layout_still_serves_and_migrates(spark, toks, tmp_path):
+@pytest.mark.parametrize(
+    "store_cols", [None, ("text",)], ids=["bare", "stored"]
+)
+def test_delete_first_cdc_stream_writes_current_layout(
+    spark, docs, toks, tmp_path, store_cols
+):
+    """A CDC stream whose first event is a delete: the delete creates
+    the sidecar, and the first upsert after it must still write (and
+    the serve read) the one format — dl on the posting rows, stats in
+    the meta, no stats/ dataset, no doclens in the BM25 plan. A sink
+    with stored fields establishes them at that first upsert."""
+    path = str(tmp_path / "idx")
+    sink, on_delete = IX.posting_index_cdc_sink(
+        path, fields=("text",), id_col="doc_id", compact_every=0,
+        store_cols=store_cols,
+    )
+    on_delete(spark.createDataFrame([(3,), (999,)], "doc_id long"), "film")
+    batch = docs.filter(F.col("doc_id") < 30).select("doc_id", "text")
+    sink(batch, "film")
+    assert read_posting_meta(path)["layout_v"] == IX.LAYOUT_V
+    assert "dl" in spark.read.parquet(os.path.join(path, "postings")).columns
+    assert not os.path.exists(os.path.join(path, "stats"))
+    df = bm25_topk_from_index(spark, path, QUERY, k=10)
+    assert not _reads(df, "doclens")
+    # the delete came first, so doc 3's upserted version is live
+    assert _topk(df) == _topk(
+        bm25_topk(toks.filter(F.col("doc_id") < 30), QUERY, k=10)
+    )
+
+
+def _stale(meta: dict, case: str) -> dict:
+    if case == "no_layout":
+        meta.pop("layout_v")
+    elif case == "no_counter":
+        for k in ("next_seq", "committed_seq", "dead_ranges"):
+            meta.pop(k)
+    else:
+        meta["layout_v"] = {"v1": 1, "v2": 2}[case]
+    return meta
+
+
+def _files(path):
+    return sorted(
+        (os.path.relpath(os.path.join(dp, f), path),
+         os.stat(os.path.join(dp, f)).st_mtime_ns)
+        for dp, _dns, fns in os.walk(path)
+        for f in fns
+    )
+
+
+@pytest.mark.parametrize("case", ["v1", "v2", "no_layout", "no_counter"])
+def test_stale_sidecar_is_rejected_before_any_write(
+    spark, toks, tmp_path, case
+):
+    """An index in any other on-disk format is rejected — never served,
+    never extended, never migrated: a serve raises ValueError naming
+    the path, and an upsert raises before writing any file (not even
+    the writer lease)."""
     path = str(tmp_path / "idx")
     build_posting_index(
-        toks,
-        path,
-        fields=("text", "source"),
-        tokens_col={"text": "tokens", "source": "source_tokens"},
+        toks.filter(F.col("doc_id") < 10), path, tokens_col={"text": "tokens"}
     )
-    want = _topk(bm25_topk(toks, QUERY, k=10))
-    want_mm = _topk(
-        multi_match_bm25(toks, "spark src1", ["text", "source"], k=10)
-    )
-    _doctor_to_v1(spark, path)
-    assert read_posting_meta(path)["layout_v"] == 1
-    # the v1 serve path (doclens join + stats/ artifact) still works
-    df = bm25_topk_from_index(spark, path, QUERY, k=10)
-    assert _reads(df, "doclens")
-    assert _topk(df) == want
-    assert _topk(
-        multimatch_bm25_from_index(
-            spark, path, "spark src1", fields=("text", "source"), k=10
+    mpath = os.path.join(path, "_index_meta.json")
+    with open(mpath, encoding="utf-8") as fh:
+        meta = json.load(fh)
+    with open(mpath, "w", encoding="utf-8") as fh:
+        json.dump(_stale(meta, case), fh)
+    before = _files(path)
+    with pytest.raises(ValueError, match=re.escape(path)):
+        bm25_topk_from_index(spark, path, QUERY, k=10)
+    with pytest.raises(ValueError, match=re.escape(path)):
+        upsert_posting_index(
+            toks.filter(F.col("doc_id") < 5), path,
+            tokens_col={"text": "tokens"},
         )
-    ) == want_mm
-    # full compaction migrates: dl onto the rows, stats into the meta
-    compact_posting_index(spark, path)
-    meta = read_posting_meta(path)
-    assert meta["layout_v"] >= 2 and meta["field_stats"]
-    assert not os.path.isdir(os.path.join(path, "stats"))
-    df2 = bm25_topk_from_index(spark, path, QUERY, k=10)
-    assert not _reads(df2, "doclens")
-    assert _topk(df2) == want
+    if case == "no_counter":
+        # the seq allocator refuses a counter-less sidecar too
+        with pytest.raises(ValueError, match=re.escape(mpath)):
+            IX.alloc_index_seqs(mpath, 1)
+    assert _files(path) == before
 
 
 # ---------------------------------------------------------------------------
@@ -434,30 +445,6 @@ def test_two_process_interleaved_writers(spark, toks, tmp_path):
     assert _topk(bm25_topk_from_index(spark, path, QUERY, k=10)) == before
 
 
-def test_pre_meta_legacy_tick_stays_v1(spark, toks, tmp_path):
-    """A tick on a PRE-META legacy index (postings exist, no sidecar)
-    must keep the v1 layout: writing dl-bearing rows next to dl-less
-    files would schema-split the dataset and the v2 serve would read
-    NULL dl for every legacy doc."""
-    path = str(tmp_path / "idx")
-    build_posting_index(
-        toks.filter(F.col("doc_id") < 40), path, tokens_col={"text": "tokens"}
-    )
-    _doctor_to_v1(spark, path)
-    os.remove(os.path.join(path, "_index_meta.json"))  # pre-meta now
-    append_posting_index(
-        toks.filter(F.col("doc_id") >= 40), path, tokens_col={"text": "tokens"}
-    )
-    meta = read_posting_meta(path)
-    assert meta["layout_v"] == 1
-    posts = IX.read_postings(spark, path)
-    assert "dl" not in posts.columns
-    # the v1 serve path covers the WHOLE corpus, old and new rows
-    assert _topk(bm25_topk_from_index(spark, path, QUERY, k=10)) == _topk(
-        bm25_topk(toks, QUERY, k=10)
-    )
-
-
 def test_failed_tick_releases_lease(spark, toks, tmp_path, monkeypatch):
     """A tick whose writes fail must release the lease before
     re-raising — a long-lived driver that hit one bad batch must not
@@ -598,7 +585,7 @@ def test_v3_fuzzy_expansion_prunes_termdict_bands(spark, toks, tmp_path):
     (inputFiles ignores partition pruning)."""
     path = str(tmp_path / "idx")
     build_posting_index(toks, path, tokens_col={"text": "tokens"})
-    assert read_posting_meta(path)["layout_v"] >= 3
+    assert read_posting_meta(path)["layout_v"] == IX.LAYOUT_V
     td_field = os.path.join(path, "termdict", "field=text")
     assert any(d.startswith("tlen=") for d in os.listdir(td_field))
     td = IX.read_termdict(
@@ -632,40 +619,6 @@ def test_v3_band_cap_collapses_long_tokens(spark, tmp_path):
         spark, path, fields=("text",), length_between=(25, 25)
     )
     assert {r["token"] for r in got.collect()} == {"a" * 25}
-
-
-def test_v2_index_ticks_keep_flat_termdict_and_compaction_migrates(
-    spark, toks, tmp_path
-):
-    """A pre-r14 (v1/v2) index keeps its field-only termdict across
-    ticks — mixing tlen directories into a flat dataset would poison
-    partition discovery — and the FULL compaction migrates the whole
-    artifact to v3 in one swap."""
-    path = str(tmp_path / "idx")
-    build_posting_index(toks, path, tokens_col={"text": "tokens"})
-    _doctor_to_v1(spark, path)
-    td_field = os.path.join(path, "termdict", "field=text")
-    assert not any(d.startswith("tlen=") for d in os.listdir(td_field))
-    upsert_posting_index(
-        toks.filter(F.col("doc_id") < 5), path, tokens_col={"text": "tokens"}
-    )
-    # still flat, still readable, band filter still correct (post-read)
-    assert not any(d.startswith("tlen=") for d in os.listdir(td_field))
-    got = IX.read_termdict(
-        spark, path, fields=("text",), length_between=(4, 6)
-    )
-    assert all(4 <= len(r["token"]) <= 6 for r in got.collect())
-    compact_posting_index(spark, path)
-    meta = read_posting_meta(path)
-    assert meta["layout_v"] == IX.LAYOUT_V
-    # resolve through the generation pointer: identical dir on POSIX,
-    # _gen-<g>/termdict after a no-rename pointer swap
-    td_field = os.path.join(IX._art(path, "termdict", meta), "field=text")
-    assert any(d.startswith("tlen=") for d in os.listdir(td_field))
-    got2 = IX.read_termdict(
-        spark, path, fields=("text",), length_between=(4, 6)
-    )
-    assert "PartitionFilters" in _plan(got2)
 
 
 def test_tick_spark_job_budget(spark, toks, tmp_path):

@@ -36,6 +36,7 @@ matching ES's ranking behavior.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -61,6 +62,8 @@ def ref_tables(spark):
         load_pg_dump,
     )
 
+    if not os.path.exists(REF_DUMP):
+        pytest.skip(f"reference dump not mounted: {REF_DUMP}")
     return load_pg_dump(spark, REF_DUMP)
 
 
@@ -74,7 +77,6 @@ def ref_docs(spark, ref_tables):
     analyzer-rule hash: the ~6 stemmer-chain compiles (~2 min) are paid
     once per corpus/analyzer version, not per pytest session."""
     import hashlib
-    import os
     import tempfile
 
     from djangoadmin_postgresql_2_elasticseach_spark.functions import text as T
