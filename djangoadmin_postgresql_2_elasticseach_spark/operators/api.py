@@ -126,10 +126,11 @@ def film_detail(
     dictionary probe and the listing is SEMI-JOINED on exact ids
     (broadcast — candidate-sized) instead of contains-scanned. Any
     precondition ValueError falls back to the literal scan, so the
-    endpoint's semantics never change."""
+    endpoint's semantics never change; a StaleIndexError (the index
+    needs a rebuild) propagates."""
     base = None
     if index_path is not None and spark is not None:
-        from ..search.index import icontains_from_index
+        from ..search.index import StaleIndexError, icontains_from_index
 
         try:
             hits = icontains_from_index(
@@ -142,6 +143,8 @@ def film_detail(
                 "id",
                 "left_semi",
             )
+        except StaleIndexError:
+            raise
         except ValueError as e:
             # precondition miss — scan below
             logger.debug("film_detail falls back to the scan: %s", e)
@@ -200,7 +203,8 @@ def icontains_auto(
     exactness preconditions hold, and fall back to the literal corpus
     scan on any precondition ValueError (stemmed index, multi-run or
     stopword-substring fragment, unselective fragment past
-    max_candidate_terms, field not stored). The two plans return
+    max_candidate_terms, field not stored); a StaleIndexError (an index
+    in a format that needs a rebuild) propagates. The two plans return
     identical rows by the serve path's exactness argument, so the API
     layer gets the index's O(fragment-buckets) read at scale without
     giving up the reference's semantics on the awkward inputs.
@@ -215,7 +219,7 @@ def icontains_auto(
     ``text_raw`` while the payload stays stored once under ``text``;
     the scan branch always filters the payload ``field``."""
     if index_path is not None:
-        from ..search.index import icontains_from_index
+        from ..search.index import StaleIndexError, icontains_from_index
 
         try:
             hits = icontains_from_index(
@@ -226,6 +230,8 @@ def icontains_auto(
             if id_col != "doc_id":
                 hits = hits.withColumnRenamed("doc_id", id_col)
             return hits
+        except StaleIndexError:
+            raise
         except ValueError as e:
             # precondition miss — the scan IS the right plan
             logger.debug("icontains_auto falls back to the scan: %s", e)

@@ -7,12 +7,13 @@ Reference queries: ``etl/main.py:24-38`` (movies), ``:40-49`` (genres),
 Spark-first design decision (SURVEY §2.3 ⚠): the reference joins BOTH
 bridge tables onto film_work in one query, materializing a genres ×
 persons cross-product per film and collapsing it with DISTINCT inside the
-aggregates. We aggregate each bridge independently (one small shuffle per
-bridge, no blow-up) and then LEFT-join the per-film arrays back — output
-arrays are identical (tests pin equality on films with multiple genres AND
-multiple persons) and the plan scales linearly instead of quadratically
-per film. At 100 TB the cross-product shape is the difference between a
-working job and an OOM.
+aggregates. We UNION the film rows, the credit rows and the genre-link
+rows (each bridge semi-joined to the films being built first) and group
+by film id once — one shuffle, no blow-up, no join back. Output arrays
+are identical (tests pin equality on films with multiple genres AND
+multiple persons) and the plan scales linearly in the films being built
+plus their bridge rows instead of quadratically per film. At 100 TB the
+cross-product shape is the difference between a working job and an OOM.
 
 Ordering: PG's ``array_agg(DISTINCT ...)`` returns sorted distinct values;
 we use ``array_sort(collect_set(...))`` for deterministic parity.
@@ -36,53 +37,43 @@ ROLE_SYNONYMS = {
 }
 
 
-def _persons_per_film(person_film_work: DataFrame, person: DataFrame) -> DataFrame:
-    """Per-film distinct person structs: one aggregation over the person
-    bridge only (no genre cross-product).
-
-    Mirrors the ``json_agg(DISTINCT jsonb_build_object('person_role', ...,
-    'person_id', ..., 'person_name', ...)) FILTER (WHERE p.id IS NOT NULL)``
-    aggregate (reference etl/main.py:27-28).
-    """
+def _person_rows(person_film_work: DataFrame, person: DataFrame) -> DataFrame:
+    """One row per credit: the distinct-able person struct the
+    ``json_agg(DISTINCT jsonb_build_object('person_role', ...,
+    'person_id', ..., 'person_name', ...)) FILTER (WHERE p.id IS NOT
+    NULL)`` aggregate collects (reference etl/main.py:27-28), NULL for a
+    dangling person id, plus the person's ``modified``."""
     joined = person_film_work.alias("pfw").join(
         F.broadcast(person.alias("p")),
         F.col("pfw.person_id") == F.col("p.id"),
         "left",
     )
-    return (
-        joined.groupBy(F.col("pfw.film_work_id").alias("film_work_id"))
-        .agg(
-            F.array_sort(
-                F.collect_set(  # collect_set = DISTINCT; skips NULL structs = FILTER
-                    F.when(
-                        F.col("p.id").isNotNull(),
-                        F.struct(
-                            F.col("pfw.role").alias("person_role"),
-                            F.col("p.id").alias("person_id"),
-                            F.col("p.full_name").alias("person_name"),
-                        ),
-                    )
-                )
-            ).alias("persons"),
-            F.max(F.col("p.modified")).alias("p_modified"),
-        )
+    return joined.select(
+        F.col("pfw.film_work_id").alias("film_work_id"),
+        F.when(
+            F.col("p.id").isNotNull(),
+            F.struct(
+                F.col("pfw.role").alias("person_role"),
+                F.col("p.id").alias("person_id"),
+                F.col("p.full_name").alias("person_name"),
+            ),
+        ).alias("person"),
+        F.col("p.modified").alias("_modified"),
     )
 
 
-def _genres_per_film(genre_film_work: DataFrame, genre: DataFrame) -> DataFrame:
-    """Per-film distinct genre names (reference etl/main.py:29
-    ``array_agg(DISTINCT g.name)``)."""
+def _genre_rows(genre_film_work: DataFrame, genre: DataFrame) -> DataFrame:
+    """One row per genre link: the name ``array_agg(DISTINCT g.name)``
+    collects (reference etl/main.py:29) and the genre's ``modified``."""
     joined = genre_film_work.alias("gfw").join(
         F.broadcast(genre.alias("g")),
         F.col("gfw.genre_id") == F.col("g.id"),
         "left",
     )
-    return (
-        joined.groupBy(F.col("gfw.film_work_id").alias("film_work_id"))
-        .agg(
-            F.array_sort(F.collect_set(F.col("g.name"))).alias("genres"),
-            F.max(F.col("g.modified")).alias("g_modified"),
-        )
+    return joined.select(
+        F.col("gfw.film_work_id").alias("film_work_id"),
+        F.col("g.name").alias("genre"),
+        F.col("g.modified").alias("_modified"),
     )
 
 
@@ -98,37 +89,53 @@ def film_changeset(
     ``modified = greatest(fw.modified, max(p.modified), max(g.modified))``
     (reference etl/main.py:26 — the change-version of the derived row).
 
+    ``film_work`` is the set of films to denormalize — the whole table
+    or an affected subset; the bridges are semi-joined to its ids first,
+    so the cost follows that set, not the bridge tables. Film rows,
+    credit rows and genre-link rows are then unioned and grouped by film
+    id once: ``collect_set`` skips the NULLs the other row kinds carry,
+    so a film with no persons or no genres gets ``[]``, and ``max`` over
+    all three ``modified`` values is the ``greatest`` above.
+
     Columns: id, title, description, rating, type, modified, persons, genres.
     """
-    per_film_persons = _persons_per_film(person_film_work, person)
-    per_film_genres = _genres_per_film(genre_film_work, genre)
-
-    fw = film_work.alias("fw")
-    out = (
-        fw.join(
-            per_film_persons.alias("pp"),
-            F.col("fw.id") == F.col("pp.film_work_id"),
-            "left",
-        )
-        .join(
-            per_film_genres.alias("gg"),
-            F.col("fw.id") == F.col("gg.film_work_id"),
-            "left",
+    ids = film_work.select(F.col("id").alias("_fid"))
+    pfw = person_film_work.join(
+        ids, person_film_work.film_work_id == ids._fid, "left_semi"
+    )
+    gfw = genre_film_work.join(
+        ids, genre_film_work.film_work_id == ids._fid, "left_semi"
+    )
+    films = film_work.select(
+        F.col("id").alias("film_work_id"),
+        F.struct("modified", "title", "description", "rating", "type").alias("film"),
+        F.col("modified").alias("_modified"),
+    )
+    rows = films.unionByName(
+        _person_rows(pfw, person), allowMissingColumns=True
+    ).unionByName(_genre_rows(gfw, genre), allowMissingColumns=True)
+    return (
+        rows.groupBy("film_work_id")
+        .agg(
+            # the group's non-NULL `film` is its film row (the latest
+            # version, should a batch hold two); max, not first, keeps
+            # the aggregate deterministic
+            F.max("film").alias("film"),
+            F.max("_modified").alias("modified"),
+            F.array_sort(F.collect_set("person")).alias("persons"),
+            F.array_sort(F.collect_set("genre")).alias("genres"),
         )
         .select(
-            F.col("fw.id").alias("id"),
-            F.col("fw.title").alias("title"),
-            F.col("fw.description").alias("description"),
-            F.col("fw.rating").alias("rating"),
-            F.col("fw.type").alias("type"),
-            F.greatest(
-                F.col("fw.modified"), F.col("pp.p_modified"), F.col("gg.g_modified")
-            ).alias("modified"),
-            F.coalesce(F.col("pp.persons"), F.array()).alias("persons"),
-            F.coalesce(F.col("gg.genres"), F.array()).alias("genres"),
+            F.col("film_work_id").alias("id"),
+            F.col("film.title").alias("title"),
+            F.col("film.description").alias("description"),
+            F.col("film.rating").alias("rating"),
+            F.col("film.type").alias("type"),
+            "modified",
+            "persons",
+            "genres",
         )
     )
-    return out
 
 
 def _role_names(role: str):

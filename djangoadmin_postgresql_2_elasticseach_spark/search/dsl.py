@@ -357,11 +357,12 @@ def _after_predicate(keys: list[tuple[str, str]], values: list):
     cursor tuple under the sort order — the keyset-pagination predicate
     (pushes to the scan on the leading key; no O(offset) skip).
 
-    Null-aware in the page sort's own null order (Spark's ``asc()``
-    puts nulls first, ``desc()`` puts them last), so a cursor holding
-    a null — the `sort` values of a hit whose sort field is null —
-    continues the walk instead of matching nothing. The equal-prefix
-    terms compare with ``eqNullSafe``."""
+    Null-aware in the page sort's own null order, nulls last in both
+    directions (ES's default ``missing: _last``): after a value come
+    the later values, then the nulls, and nothing follows a null. So a
+    cursor holding a null — the `sort` values of a hit whose sort field
+    is null — still walks on through the later sort keys. The
+    equal-prefix terms compare with ``eqNullSafe``."""
     if len(values) != len(keys):
         raise ValueError(
             f"search_after needs {len(keys)} values (one per sort key "
@@ -369,10 +370,9 @@ def _after_predicate(keys: list[tuple[str, str]], values: list):
         )
 
     def after(col, order, v):
-        if order == "desc":  # nulls last: only a null follows a value
-            return F.lit(False) if v is None else (col < v) | col.isNull()
-        # nulls first: every value follows a null
-        return col.isNotNull() if v is None else col > v
+        if v is None:
+            return F.lit(False)
+        return ((col < v) if order == "desc" else (col > v)) | col.isNull()
 
     cond = None
     for i, (field, order) in enumerate(keys):
@@ -425,7 +425,8 @@ def _respond(frame: DataFrame, scored: bool, body: dict, id_col: str) -> dict:
     else:
         keys = _sort_keys(body, scored, id_col)
         exprs = [
-            F.col(f).desc() if d == "desc" else F.col(f).asc() for f, d in keys
+            F.col(f).desc() if d == "desc" else F.col(f).asc_nulls_last()
+            for f, d in keys
         ]
         obs = Observation()
         page = frame.observe(obs, F.count(F.lit(1)).alias("total"))

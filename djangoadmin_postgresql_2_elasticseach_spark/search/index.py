@@ -258,11 +258,18 @@ N_STORE_BUCKETS = 16
 # posting buckets plus the sidecar.
 #
 # A sidecar in any other format (another layout_v, or no seq counter)
-# is rejected with a ValueError before anything is read or written:
+# is rejected with a StaleIndexError before anything is read or written:
 # rebuild the index. There is no migration — the ES posture for old
 # on-disk formats (reindex), and cached indexes carry the version in
 # their cache key.
 LAYOUT_V = 3
+
+
+class StaleIndexError(ValueError):
+    """The index on disk is in a format this engine does not read or
+    extend: it needs a rebuild. A ValueError, but not a precondition
+    miss — a serve path must not answer it with a corpus scan."""
+
 
 # Length-band cap for the termdict partition column: vocab length
 # distributions have a long tail of rare huge tokens — one shared
@@ -527,7 +534,7 @@ def alloc_index_seqs(
         if meta is None:
             meta = {"next_seq": 0, "committed_seq": 0, "dead_ranges": []}
         elif "next_seq" not in meta:
-            raise ValueError(
+            raise StaleIndexError(
                 f"index sidecar {meta_path} has no seq counter — an "
                 "unsupported pre-counter format; rebuild the index"
             )
@@ -598,13 +605,13 @@ def _posting_meta_path(path: str) -> str:
 def _check_format(path: str, meta: dict | None) -> None:
     """Reject a sidecar this engine cannot read or extend — one whose
     ``layout_v`` is not LAYOUT_V or that has no commit counter — with a
-    ValueError naming the path. Readers and writers call it before
+    StaleIndexError naming the path. Readers and writers call it before
     touching any artifact, so a stale index is never served and never
     written to. No sidecar at all is a fresh path."""
     if meta is None:
         return
     if meta.get("layout_v") != LAYOUT_V or meta.get("committed_seq") is None:
-        raise ValueError(
+        raise StaleIndexError(
             f"posting index at {path} has layout_v="
             f"{meta.get('layout_v')!r} and committed_seq="
             f"{meta.get('committed_seq')!r}; this engine reads only "

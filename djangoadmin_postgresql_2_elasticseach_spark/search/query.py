@@ -30,23 +30,30 @@ the persisted artifact instead of re-analyzing in-query.
 
 from __future__ import annotations
 
-import re
+import unicodedata
+from itertools import groupby
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import ALL_STOPWORDS, analyze
 
-# Python twin of functions.text.tokenize for the query string itself —
-# the same analyzer must hit both sides of the match (ES analyzes the
-# query with the field's analyzer too).
-_QUERY_SPLIT = re.compile(r"[^0-9a-zA-ZЀ-ӿ]+")
 _STOPSET = frozenset(ALL_STOPWORDS)
 
 
+def _is_token_char(ch: str) -> bool:
+    cat = unicodedata.category(ch)
+    return cat[0] == "L" or cat == "Nd"
+
+
 def query_tokens(query: str) -> list[str]:
-    """Tokenizer-only query split (lowercase, non-alphanumeric breaks)."""
-    return [t for t in _QUERY_SPLIT.split(query.lower()) if t]
+    """Tokenizer-only query split: the Python twin of
+    ``functions.text.tokenize`` (lowercase, then split on runs of
+    characters outside ``\\p{L}``/``\\p{Nd}``), so the query goes
+    through the tokenizer the indexed text went through (ES analyzes
+    the query with the field's analyzer too)."""
+    runs = groupby(query.lower(), _is_token_char)
+    return ["".join(run) for keep, run in runs if keep]
 
 
 def analyze_query(query: str, stem: bool = True) -> list[str]:

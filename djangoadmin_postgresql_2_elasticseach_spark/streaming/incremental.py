@@ -14,11 +14,17 @@ Semantics preserved exactly:
 
 Scale design: the reference's predicate puts the OR inside one big join
 query — at 100 TB that forces a full scan of all five tables every tick.
-Here each dimension is filtered FIRST (pushed-down ``modified > ckpt``
-scan, partition-prunable when stored time-partitioned), the affected
-film-id set is the union of three small key sets, and the heavy denorm
-join runs only over those keys (semi-join pruning). Unchanged films are
-never touched.
+Here a tick first runs one change probe (``change_probe``): one Spark
+job counts the ``modified > ckpt`` rows each entity's builder filters
+on, each against that entity's own checkpoint. An entity with no
+changed row is skipped without planning and reports 0 — a tick that
+edits no genre runs no genre job. A changed entity's dimensions are
+filtered FIRST (pushed-down ``modified > ckpt`` scan, partition-
+prunable when stored time-partitioned), the affected film-id set is the
+union of three small key sets, and the denormalization semi-joins both
+bridge tables to those films before its one aggregation
+(operators/denorm.film_changeset). Unchanged films and their bridge
+rows are never aggregated.
 """
 
 from __future__ import annotations
@@ -50,7 +56,12 @@ def changed_film_ids(
     """Film ids affected since ckpt: own edit OR related person/genre
     edit (the reference's ``fw.modified > %s OR p.modified > %s OR
     g.modified > %s``, etl/main.py:35) — computed as three pruned scans +
-    semi-joins instead of one full-table OR."""
+    semi-joins instead of one full-table OR.
+
+    An id may repeat (a film edited AND credited to a renamed person):
+    the set feeds a semi-join, so it is not de-duplicated, and every
+    branch is a filter or a semi-join so its size estimate stays that of
+    its source scan and the planner can broadcast it."""
     own = film_work.filter(F.col("modified") > _ckpt_col(ckpt)).select(
         F.col("id").alias("film_id")
     )
@@ -59,16 +70,20 @@ def changed_film_ids(
         .select(F.col("id").alias("p_id"))
     )
     via_person = person_film_work.join(
-        F.broadcast(changed_p), person_film_work.person_id == changed_p.p_id
+        F.broadcast(changed_p),
+        person_film_work.person_id == changed_p.p_id,
+        "left_semi",
     ).select(F.col("film_work_id").alias("film_id"))
     changed_g = (
         genre.filter(F.col("modified") > _ckpt_col(ckpt))
         .select(F.col("id").alias("g_id"))
     )
     via_genre = genre_film_work.join(
-        F.broadcast(changed_g), genre_film_work.genre_id == changed_g.g_id
+        F.broadcast(changed_g),
+        genre_film_work.genre_id == changed_g.g_id,
+        "left_semi",
     ).select(F.col("film_work_id").alias("film_id"))
-    return own.unionByName(via_person).unionByName(via_genre).distinct()
+    return own.unionByName(via_person).unionByName(via_genre)
 
 
 def changed_movie_docs(tables: dict[str, DataFrame], ckpt: str) -> DataFrame:
@@ -108,6 +123,43 @@ def changed_person_docs(tables: dict[str, DataFrame], ckpt: str) -> DataFrame:
     return person_docs(p, tables["person_film_work"])
 
 
+# the source tables whose ``modified > ckpt`` rows feed each entity's
+# builder: a builder emits nothing unless one of them has such a row
+PROBE_TABLES = {
+    "movies": ("film_work", "person", "genre"),
+    "genres": ("genre",),
+    "persons": ("person",),
+}
+
+
+def _observe(df: DataFrame, *aggs) -> dict:
+    """Global aggregates over ``df`` in one Spark job: an observation on
+    a no-op write, where ``df.agg(...)`` adds a shuffle stage and a
+    result stage, each its own job under AQE."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    df.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
+    return obs.get
+
+
+def change_probe(tables: dict[str, DataFrame], ckpts: dict[str, str]) -> dict[str, int]:
+    """Changed-row count per entity, each against its own checkpoint, in
+    one Spark job over the unioned, pushed-down ``modified > ckpt``
+    scans."""
+    rows = None
+    for entity, names in PROBE_TABLES.items():
+        for name in names:
+            part = tables[name].filter(
+                F.col("modified") > _ckpt_col(ckpts[entity])
+            ).select(F.lit(entity).alias("entity"))
+            rows = part if rows is None else rows.unionByName(part)
+    return _observe(
+        rows,
+        *[F.count(F.when(F.col("entity") == e, 1)).alias(e) for e in PROBE_TABLES],
+    )
+
+
 class IncrementalEtl:
     """One-tick driver: compute changed docs → sink → commit checkpoint.
 
@@ -132,11 +184,12 @@ class IncrementalEtl:
         ckpt = self.state.get_state(key, DATETIME_MIN)
         docs = builder(self.tables, ckpt).cache()
         try:
-            # one aggregate over the cached batch: its size and the
-            # checkpoint it advances to
-            n, new_ckpt = docs.agg(
-                F.count(F.lit(1)), F.max("modified")
-            ).first()
+            # one job over the batch, which fills its cache: its size
+            # and the checkpoint it advances to
+            got = _observe(
+                docs, F.count(F.lit(1)).alias("n"), F.max("modified").alias("m")
+            )
+            n, new_ckpt = got["n"], got["m"]
             if n == 0:
                 return 0
             self.sink(docs, entity)
@@ -149,8 +202,15 @@ class IncrementalEtl:
 
     def run_tick(self) -> dict[str, int]:
         """One poll tick over all three entities (reference runs them
-        sequentially per tick, etl/main.py:363-379)."""
-        return {e: self.run_once(e) for e in self.ENTITIES}
+        sequentially per tick, etl/main.py:363-379). One change probe
+        first; an entity with no changed source row is not planned and
+        reports 0."""
+        ckpts = {
+            e: self.state.get_state(key, DATETIME_MIN)
+            for e, (key, _) in self.ENTITIES.items()
+        }
+        changed = change_probe(self.tables, ckpts)
+        return {e: self.run_once(e) if changed[e] else 0 for e in self.ENTITIES}
 
 
 ROLLUP_KEY = "last_rollup_ts"

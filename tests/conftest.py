@@ -12,6 +12,17 @@ SF_SMOKE = os.path.join(TESTDATA, "sf0.001")
 SF_CORRECT = os.path.join(TESTDATA, "sf0.01")
 
 
+@pytest.fixture(scope="session", autouse=True)
+def _index_cache_dir(tmp_path_factory):
+    """Index builds cached by path identity (search/index.py,
+    operators/similarity.py) go to this session's own tmp dir, so a run
+    never reuses another process's builds from the shared default
+    ``<tmp>/spark_graft_index_cache``. A cache dir the caller set wins."""
+    os.environ.setdefault(
+        "SPARK_GRAFT_INDEX_CACHE", str(tmp_path_factory.mktemp("index_cache"))
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(master="local[8]", shuffle_partitions=8)

@@ -523,10 +523,11 @@ def wide(spark, tmp_path_factory):
         # counted before the cursor filter
         ({"query": SHUFFLE, "sort": [{"n_chars": "asc"}],
           "search_after": [110, 10], "size": 3}, 20, 3),
-        # a null cursor: ascending sorts put nulls first, so every
-        # non-null row follows it
+        # a null cursor: nulls sort last in both directions (ES's
+        # `missing: _last`) and no row here has a null n_chars, so no
+        # row follows it; the total is still every match
         ({"query": SHUFFLE, "sort": [{"n_chars": "asc"}],
-          "search_after": [None, 10], "size": 3}, 20, 3),
+          "search_after": [None, 10], "size": 3}, 20, 0),
         # a scored frame, ranked only by the page's top-k
         ({"query": {"multi_match": {"query": "shufle", "fields": ["text"],
                                     "fuzziness": "auto"}}, "size": 3}, 20, 3),
@@ -564,7 +565,8 @@ def test_search_after_walks_past_null_sort_values(spark, wide, served, order):
     """Keyset pagination over a sort field holding nulls and ties:
     walking every page by search_after, each cursor taken from the last
     hit's `sort` values, sees each hit exactly once and in the page
-    sort's null order (nulls first ascending, last descending)."""
+    sort's null order: nulls last in both directions, as ES's default
+    ``missing: _last``."""
     docs, path = wide
     docs = docs.withColumn(
         "n_chars",
@@ -580,7 +582,7 @@ def test_search_after_walks_past_null_sort_values(spark, wide, served, order):
     full = run({**body, "size": 40})["hits"]["hits"]
     # 10 of the 20 hits hold a null sort value
     assert len(full) == 20
-    assert sum(h["sort"][0] is None for h in full) == 10
+    assert [h["sort"][0] is None for h in full] == [False] * 10 + [True] * 10
     seen, cursor = [], None
     for _ in range(10):
         hits = run({**body, "search_after": cursor} if cursor else body)[

@@ -287,6 +287,34 @@ def test_auto_fallback_logs_its_reason(spark, docs, auto_idx, caplog):
     )
 
 
+def test_stale_index_raises_instead_of_scanning(spark, docs, auto_idx, tmp_path):
+    """An index whose sidecar is in an old format needs a rebuild: both
+    API dispatchers raise StaleIndexError instead of answering the
+    request with the O(corpus) scan a precondition miss takes."""
+    import json
+    import shutil
+
+    from djangoadmin_postgresql_2_elasticseach_spark.operators.api import film_detail
+    from djangoadmin_postgresql_2_elasticseach_spark.search.index import (
+        StaleIndexError,
+    )
+
+    stale = str(tmp_path / "stale")
+    shutil.copytree(auto_idx, stale)
+    meta_path = os.path.join(stale, "_index_meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    meta["layout_v"] = 1
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    assert _scan(docs, "usto")  # the scan would have answered
+    with pytest.raises(StaleIndexError, match="rebuild"):
+        _auto(spark, docs, "usto", stale)
+    listing = docs.select(F.col("doc_id").cast("string").alias("id"))
+    with pytest.raises(StaleIndexError, match="rebuild"):
+        film_detail(listing, "1", spark=spark, index_path=stale)
+
+
 def test_film_detail_dispatches_pk_lookup(spark, tmp_path):
     """film_detail with an id-indexed path resolves the pk fragment via
     the index (broadcast semi-join on exact candidate ids) and returns

@@ -50,6 +50,20 @@ def test_tokenizer_cross_engine_parity(spark, duck):
         assert got[i] == _duck_tokens(duck, s), f"diverged on {s!r}"
 
 
+def test_query_tokens_match_spark_tokenize(spark):
+    """The query-side Python tokenizer splits where the engine's Spark
+    ``tokenize`` does, so a query word hits the doc it was indexed from
+    (accented Latin, Greek, CJK, full-width, non-ASCII digits). Java's
+    and Python's lowercasing agree on every sample, the two
+    KNOWN_DIVERGENT ones included (İ → i + U+0307, final sigma ς)."""
+    from djangoadmin_postgresql_2_elasticseach_spark.search.query import query_tokens
+
+    samples = PARITY_SAMPLES + KNOWN_DIVERGENT + ["Ελλάδα", "日本語 text"]
+    got = _spark_tokens(spark, samples)
+    for i, s in enumerate(samples):
+        assert query_tokens(s) == got[i], f"diverged on {s!r}"
+
+
 def test_known_casefold_divergences_still_diverge(spark, duck):
     """If an engine upgrade harmonizes these, this test fails and the
     registry docstring + ingest guidance should be updated."""
