@@ -9,6 +9,13 @@ Stemming is the FULL Snowball pair (Porter2 english + snowball russian)
 from functions/snowball.py, emitted as one F.transform stage per stemmer
 step with per-token script-dispatch gates — deterministic, JVM-side, and
 reproduced verbatim in the DuckDB oracle from the same stage functions.
+
+Where stemming runs: the posting index's write path
+(search/index.py:_posting_partials) calls ``analyze(stem=False)`` and
+stems the batch's distinct tokens on the driver with ``snowball.stem``,
+so its plans carry no stemmer expression; queries stem in Python too
+(search/query.py:analyze_query). The in-plan stemmer chain below serves
+the corpus operators and the analyzed-doc tables.
 """
 
 from __future__ import annotations

@@ -1595,13 +1595,12 @@ def _posting_index_ticks(spark: SparkSession, sf_dir: str) -> str:
     two tick deltas (search/index.build/append_posting_index) — the
     shared setup of the two r11 incremental-search queries. Ticks
     consume the PERSISTED analyzed stream (analyzed_corpus_cached via
-    tokens_col) rather than re-emitting the Snowball expression: the
-    full analyzer chain is a huge Column whose per-query Catalyst cost
-    (~10 s) is fixed regardless of batch size, so the tick plan is one
-    cheap explode+agg over the delta's stored tokens — the same
-    amortize-at-ingest posture every other analyzer query takes (and
-    what a production tick does: the ingest pipeline analyzed the
-    batch already; the posting index is a downstream projection)."""
+    tokens_col) rather than analyzing the text again: the tick plan is
+    one explode+agg over the delta's stored tokens, with no vocabulary
+    job — the same amortize-at-ingest posture every other analyzer
+    query takes (and what a production tick does: the ingest pipeline
+    analyzed the batch already; the posting index is a downstream
+    projection)."""
     from .search.index import (
         analyzed_corpus_cached,
         append_posting_index,
@@ -2015,8 +2014,8 @@ def _q_streaming_index_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/stream.posting_index_stream — the reference's 10 s
     PG→ES polling loop as readStream→foreachBatch): the corpus arrives
     as two file chunks of PRE-ANALYZED rows (analysis-at-ingest — the
-    stream carries the token arrays, so ticks never re-compile the
-    stemmer expression), maxFilesPerTrigger=1 forces ≥2 micro-batch
+    stream carries the token arrays, so ticks never analyze the text
+    again), maxFilesPerTrigger=1 forces ≥2 micro-batch
     upsert ticks, and BM25 then serves from the stream-built index.
     Oracle = the ONE-SHOT scan-based bm25_topk SQL — micro-batched
     ingest must be invisible to the served scores."""

@@ -709,6 +709,38 @@ def _reclaim_generations(path: str, keep: int) -> None:
             store.remove_tree(os.path.join(path, d))
 
 
+def _stem_lookup(vocab):
+    """A Column function mapping a token to its Snowball stem through a
+    literal hash table of ``vocab`` (the batch's distinct surface
+    tokens). Each token is stemmed here once with snowball.stem, the
+    pure-Python stemmer the published-vocabulary suites pin; tokens
+    that stem to themselves are left out. The table reaches the plan as
+    ONE JSON string that constant folding turns into an array<map>
+    literal, bucketed by _token_bucket, so a lookup is a crc32, an
+    array index and a probe of a ~8-entry map (a flat map literal is a
+    linear scan per row)."""
+    import zlib
+
+    from ..functions.snowball import stem as _stem
+
+    pairs = {t: st for t in vocab if (st := _stem(t)) != t}
+    if not pairs:
+        return lambda token: token
+    n = len(pairs) // 8 + 1
+    table = [{} for _ in range(n)]
+    for t, st in pairs.items():
+        table[zlib.crc32(t.encode("utf-8")) % n][t] = st
+    lit = F.from_json(
+        F.lit(json.dumps(table, ensure_ascii=False)), "array<map<string,string>>"
+    )
+    return lambda token: F.coalesce(
+        F.try_element_at(
+            F.element_at(lit, _token_bucket(token, n).cast("int") + 1), token
+        ),
+        token,
+    )
+
+
 def _posting_partials(
     docs: DataFrame,
     fields: tuple[str, ...],
@@ -734,19 +766,25 @@ def _posting_partials(
     ``tokens_col``: ALREADY-ANALYZED array<string> column(s) (the full
     T.analyze stream, duplicates kept — e.g. analyzed_corpus_cached's
     ``tokens`` / ``<field>_tokens``) to explode instead of re-running
-    the analyzer. This is not just a convenience: the full Snowball
-    chain is a very large Column expression whose per-query Catalyst
-    cost (~10 s) is fixed regardless of batch size, so serving ticks
-    from the persisted analyzed artifact is the same
-    amortize-at-ingest posture every other analyzer query here takes.
-    A str names the single field's column; a {field: column} dict
-    covers multi-field indexes (fields missing from the dict are
-    analyzed in-plan).
+    the analyzer — the amortize-at-ingest posture of the other analyzer
+    queries here. A str names the single field's column; a
+    {field: column} dict covers multi-field indexes (fields missing
+    from the dict are analyzed in-plan).
+
+    In-plan analysis keeps tokenize and stopwords in the plan and stems
+    the batch VOCABULARY, not the rows: one Spark job collects the
+    distinct surface tokens of every in-plan field, the driver stems
+    them (_stem_lookup), and the plan maps surface → stem before the
+    (doc_id, token) aggregation. The plan holds no Snowball expression.
+    Stemming is one token to one token, so positions and dl are those
+    of the unstemmed stream, and two surface tokens with one stem merge
+    their tf and positions exactly as the stemmed stream would.
 
     ``seq`` is the batch's allocated sequence number (alloc_index_seqs)
     — liveness is "written after the doc's latest tombstone", by
     counter order, never wall clock."""
     from ..plans.tuning import spread
+    from ..session import observe_aggs
 
     if isinstance(tokens_col, str):
         if len(fields) != 1:
@@ -759,56 +797,58 @@ def _posting_partials(
     unknown = sorted(set(tokens_col) - set(fields))
     if unknown:
         raise ValueError(f"tokens_col covers non-indexed fields {unknown}")
+    in_plan = [f for f in fields if f not in tokens_col]
+    stem_of = None
+    if stem and in_plan:
+        surface = None
+        for f in in_plan:
+            part = docs.select(
+                F.explode(T.analyze(f"`{f}`", stem=False)).alias("t")
+            )
+            surface = part if surface is None else surface.unionByName(part)
+        vocab = observe_aggs(surface, F.collect_set("t").alias("v"))["v"]
+        stem_of = _stem_lookup(vocab)
     post_parts = []
     for f in fields:
-        col = tokens_col.get(f)
         # dl rides every posting row (the Lucene norms posture) so
         # BM25 serves from the pruned bucket probe alone and never
-        # joins the O(corpus) doclens table. dl is the doc's
-        # TOTAL analyzed-token count — for a pre-analyzed stored array
-        # that is just size(col), computed in the SAME projection as
-        # the explode: the (field, doc_id) window the r13 layout used
-        # here cost every tick a second exchange + sort of the whole
-        # postings delta after the (doc_id, token) aggregation (r15:
-        # one shuffle per tick field, not two). The in-plan analyzer
-        # path keeps the window — a size(analyze(..)) twin would let
-        # CollapseProject duplicate the very large Snowball expression.
+        # joins the O(corpus) doclens table. dl is the doc's TOTAL
+        # analyzed-token count, size() of the token array, computed in
+        # the SAME projection as the explode, so no window has to
+        # exchange and sort the postings delta a second time.
         # spread is KEYED BY doc_id (not round-robin): every row of a
         # doc lands in one partition, so the (doc_id, token) tf
-        # aggregation below — and the in-plan dl window — are
-        # satisfied by this one slim pre-explode exchange and plan
-        # with NO exchange of their own. The exploded posting stream
-        # (the batch's heaviest intermediate, ~dl rows per doc) never
-        # crosses the network. The batch localCheckpoint below erases
-        # this partitioning, so the doclens dedup downstream shuffles
-        # again (the exchange w_doclens relies on). At scale spread()
-        # is a no-op and the agg inserts its usual exchange — local
-        # fixed cost is what this removes.
-        if col is not None:
-            toks = spread(docs.select(id_col, col), [id_col]).select(
-                F.col(id_col).alias("doc_id"),
-                F.posexplode(F.col(col)).alias("pos", "token"),
-                F.size(F.col(col)).cast("long").alias("dl"),
+        # aggregation below is satisfied by this one slim pre-explode
+        # exchange and plans with NO exchange of its own. The exploded
+        # posting stream (the batch's heaviest intermediate, ~dl rows
+        # per doc) never crosses the network. The batch
+        # localCheckpoint below erases this partitioning, so the
+        # doclens dedup downstream shuffles again (the exchange
+        # w_doclens relies on). At scale spread() is a no-op and the
+        # agg inserts its usual exchange — local fixed cost is what
+        # this removes.
+        if f in tokens_col:
+            arrs = spread(
+                docs.select(id_col, F.col(tokens_col[f]).alias("_toks")),
+                [id_col],
             )
         else:
-            toks = spread(docs.select(id_col, f), [id_col]).select(
-                F.col(id_col).alias("doc_id"),
-                F.posexplode(T.analyze(f"`{f}`", stem=stem)).alias(
-                    "pos", "token"
-                ),
+            arrs = spread(docs.select(id_col, f), [id_col]).select(
+                id_col, T.analyze(f"`{f}`", stem=False).alias("_toks")
             )
+        toks = arrs.select(
+            F.col(id_col).alias("doc_id"),
+            F.posexplode("_toks").alias("pos", "token"),
+            F.size("_toks").cast("long").alias("dl"),
+        )
+        if stem_of is not None and f not in tokens_col:
+            toks = toks.withColumn("token", stem_of(F.col("token")))
         part = toks.groupBy("doc_id", "token").agg(
             F.count(F.lit(1)).alias("tf"),
             F.sort_array(F.collect_list("pos")).alias("positions"),
             # dl is constant per doc — max() just carries it through
-            *([F.max("dl").alias("dl")] if col is not None else []),
+            F.max("dl").alias("dl"),
         )
-        if col is None:
-            from pyspark.sql import Window
-
-            part = part.withColumn(
-                "dl", F.sum("tf").over(Window.partitionBy("doc_id"))
-            )
         post_parts.append(
             part.select(
                 F.lit(f).alias("field"),
@@ -2535,8 +2575,10 @@ def posting_index_cdc_sink(
     crashes mid-write never published (the index's own commit
     watermark).
 
-    ``sink(docs, entity)`` ignores entities ≠ the indexed one when
-    ``path`` is a str; pass a dict {entity: path} to index several.
+    A str ``path`` indexes every entity the driver hands
+    ``sink(docs, entity)`` into that one index; a dict
+    {entity: path} indexes only the entities it names, each into its
+    own index, and ignores the rest.
     ``store_cols`` establishes the STORED-FIELDS tier on the first tick
     (docstore/ — searches then serve hit payloads without reading the
     source store at all; the full reference loop needs neither an

@@ -53,6 +53,17 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def observe_aggs(df, *aggs) -> dict:
+    """Global aggregates over ``df`` in one Spark job: an observation on
+    a no-op write, where ``df.agg(...)`` adds a shuffle stage and a
+    result stage, each its own job under AQE."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    df.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
+    return obs.get
+
+
 # Operator-internal persist() registry: slot name -> the one outstanding
 # persisted DataFrame for that call site (see persist_scoped).
 _SCOPED_PERSISTS: dict[str, object] = {}

@@ -55,7 +55,13 @@ def _cdc_keys(
     backfill: every current key as 'insert' (the CDC analogue of the
     timestamp path's datetime.min checkpoint — ST5)."""
     if to_v is None or from_v == to_v:
-        return spark.createDataFrame([], "id string, change string")
+        # an empty relation, not an empty createDataFrame: the latter is
+        # an RDD scan with no size estimate, and one in the affected-film
+        # union would keep the film_work join from broadcasting it
+        return spark.range(0).select(
+            F.lit(None).cast("string").alias("id"),
+            F.lit(None).cast("string").alias("change"),
+        )
     if from_v is None:
         return (
             tx_read(spark, path, to_v)
@@ -192,13 +198,18 @@ class TxlogCdcEtl:
             via_dim = rows.join(
                 F.broadcast(dim_ch.select(F.col("id").alias("_d"))),
                 rows[dim_col] == F.col("_d"),
+                "left_semi",
             ).select(F.col("film_work_id").alias("film_id"))
             via_bridge = rows.join(
                 F.broadcast(br_ch.select(F.col("id").alias("_b"))),
                 rows["id"] == F.col("_b"),
+                "left_semi",
             ).select(F.col("film_work_id").alias("film_id"))
             affected = affected.unionByName(via_dim).unionByName(via_bridge)
-        affected = affected.distinct()
+        # an id may repeat: the set only feeds a semi-join, and without
+        # a distinct (and with semi-joins, not inner joins) its size
+        # estimate stays that of its scans, so the planner broadcasts it
+        # into the film_work join (incremental.changed_film_ids)
         fw = self._snapshot("film_work", spans)
         fw = fw.join(affected, fw.id == affected.film_id, "left_semi")
         changeset = film_changeset(

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.denorm import film_changeset, genre_docs, movie_docs, person_docs
-from ..session import free_local_checkpoint
+from ..session import free_local_checkpoint, observe_aggs
 from ..sources.state import DATETIME_MIN, JsonFileState
 
 MOVIES_KEY = "last_movies_updated"   # reference etl/main.py:62
@@ -132,17 +132,6 @@ PROBE_TABLES = {
 }
 
 
-def _observe(df: DataFrame, *aggs) -> dict:
-    """Global aggregates over ``df`` in one Spark job: an observation on
-    a no-op write, where ``df.agg(...)`` adds a shuffle stage and a
-    result stage, each its own job under AQE."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    df.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
-    return obs.get
-
-
 def change_probe(tables: dict[str, DataFrame], ckpts: dict[str, str]) -> dict[str, int]:
     """Changed-row count per entity, each against its own checkpoint, in
     one Spark job over the unioned, pushed-down ``modified > ckpt``
@@ -154,7 +143,7 @@ def change_probe(tables: dict[str, DataFrame], ckpts: dict[str, str]) -> dict[st
                 F.col("modified") > _ckpt_col(ckpts[entity])
             ).select(F.lit(entity).alias("entity"))
             rows = part if rows is None else rows.unionByName(part)
-    return _observe(
+    return observe_aggs(
         rows,
         *[F.count(F.when(F.col("entity") == e, 1)).alias(e) for e in PROBE_TABLES],
     )
@@ -186,7 +175,7 @@ class IncrementalEtl:
         try:
             # one job over the batch, which fills its cache: its size
             # and the checkpoint it advances to
-            got = _observe(
+            got = observe_aggs(
                 docs, F.count(F.lit(1)).alias("n"), F.max("modified").alias("m")
             )
             n, new_ckpt = got["n"], got["m"]

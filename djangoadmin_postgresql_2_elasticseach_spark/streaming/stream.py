@@ -253,11 +253,11 @@ def posting_index_stream(
     ``tokens_col`` (str or {field: column}, see _posting_partials):
     streamed rows that already carry their ANALYZED token arrays —
     analysis-at-ingest, the posture every other index consumer here
-    takes — index without re-running the analyzer, and, as important
-    at micro-batch cadence, without re-compiling the large stemmer
-    expression per tick (a fixed ~seconds Catalyst cost per batch that
-    dwarfs small-batch work; raw-text streams pay it, pre-analyzed
-    streams don't).
+    takes — index without re-running the analyzer. Raw-text
+    micro-batches are analyzed in-plan: the plan holds tokenize and
+    stopwords only, and the batch's distinct tokens are stemmed on the
+    driver, at the cost of one more Spark job (and a second read of
+    the batch) per tick.
 
     ``store_cols`` establishes/maintains the STORED-FIELDS tier
     (docstore/ — the ES `_source`) from the stream, exactly like the

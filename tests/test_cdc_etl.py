@@ -9,6 +9,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -179,6 +180,50 @@ def test_cdc_sees_bridge_only_edit_timestamp_poll_cannot(spark, tmp_path, txdir)
     assert n_cdc["movies"]["docs"] == 1
     (doc,) = cdc_store["movies"]
     assert doc["id"] == film_id
+
+
+def test_cdc_movies_changeset_plans_no_film_work_shuffle(spark, tmp_path, txdir):
+    """The CDC affected-film set is built like the timestamp path's
+    (incremental.changed_film_ids): semi-joins to the broadcast change
+    keys and no distinct, so its size estimate stays that of its scans
+    and the film_work join broadcasts it — no sort-merge join shuffles
+    film_work to meet a few changed keys."""
+    from djangoadmin_postgresql_2_elasticseach_spark.plans.tuning import (
+        plan_string,
+    )
+
+    cdc = TxlogCdcEtl(
+        spark, JsonFileState(str(tmp_path / "cdc.json")), txdir,
+        _capture_sink({}),
+    )
+    cdc.run_tick()
+    t1 = dt.datetime(2024, 3, 1)
+    tx_merge(
+        spark, txdir["person"],
+        tx_read(spark, txdir["person"]).orderBy("id").limit(1)
+        .withColumn("modified", F.lit(t1).cast("timestamp")),
+        "id",
+    )
+    gfw = tx_read(spark, txdir["genre_film_work"])
+    tx_merge(
+        spark, txdir["genre_film_work"],
+        gfw.orderBy("id").limit(1).withColumn(
+            "id", F.lit(movies_fixtures._u("99", 1))
+        ),
+        "id",
+    )
+    spans = cdc._spans("movies")
+    assert spans["person"][0] != spans["person"][1]
+    assert spans["genre_film_work"][0] != spans["genre_film_work"][1]
+    docs, _ = cdc._movies(spans)
+    plan = plan_string(docs, mode="simple")
+    # the only shuffle joins left are txlog version diffs (tx_changes'
+    # full outer join of a changed table's old and new files)
+    smj = [ln.strip() for ln in plan.splitlines() if "SortMergeJoin" in ln]
+    assert all("FullOuter" in ln for ln in smj), smj
+    assert re.search(
+        r"BroadcastHashJoin \[id#\d+\], \[film_id#\d+\], LeftSemi", plan
+    ), plan[:3000]
 
 
 def test_cdc_propagates_film_delete(spark, tmp_path, txdir):
