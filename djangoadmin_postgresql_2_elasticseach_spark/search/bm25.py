@@ -123,6 +123,16 @@ def _score_per_doc(
     )
 
 
+def _stats_literals(n_docs: int, avgdl: float | None) -> list:
+    """An indexed field's driver-side N and avgdl
+    (search/index.index_field_stats) as the literal ``n_docs`` and
+    ``avgdl`` columns _score_per_doc reads."""
+    return [
+        F.lit(n_docs).cast("long").alias("n_docs"),
+        F.lit(avgdl).cast("double").alias("avgdl"),
+    ]
+
+
 def bm25_topk_from_index(
     spark,
     path: str,
@@ -147,8 +157,10 @@ def bm25_topk_from_index(
     - per-term document frequencies are COUNTs over those same pruned
       postings (one live row per (doc, token));
     - N and avgdl come from the commit-maintained field stats
-      (index_field_stats — a meta-sidecar read plus a churn-bounded
-      dead correction), NOT a full-doclens aggregate per query;
+      (index_field_stats — a meta-sidecar read, plus one collected
+      churn-bounded dead correction when tombstones exist), NOT a
+      full-doclens aggregate per query, and enter the score as
+      literals: the plan holds no stats relation to scan or broadcast;
     - dl comes OFF THE POSTING ROWS themselves (Lucene's
       norms-with-postings: the pruned bucket probe already holds the
       length norm, and the O(corpus) doclens table is not in the serve
@@ -161,8 +173,8 @@ def bm25_topk_from_index(
     analyzer the stored tokens did — a stemmed query against a
     stem=False index would silently match nothing."""
     from .index import (
-        index_field_stats,
         field_stem as IX_field_stem,
+        index_field_stats,
         read_posting_meta,
         read_postings,
         term_buckets,
@@ -200,7 +212,9 @@ def bm25_topk_from_index(
             for i, t in enumerate(qterms)
         ]
     )
-    stats = dfs.crossJoin(F.broadcast(index_field_stats(spark, path, field)))
+    stats = dfs.select(
+        "*", *_stats_literals(*index_field_stats(spark, path, field))
+    )
     scored = _score_per_doc(pivot, stats, len(qterms), "doc_id", k, k1, b)
     return (
         scored if id_col == "doc_id"
@@ -364,7 +378,8 @@ def multimatch_bm25_from_index(
        boosts;
     3. per field: one aggregation to per-doc (tf_i, max boost_i),
        df_i from the same frame, N/avgdl from the commit-maintained
-       field stats, dl off the posting rows themselves (no doclens
+       field stats as literals (index_stats, one call for all fields —
+       no stats relation in the plan), dl off the posting rows themselves (no doclens
        scan in the plan) — then the identical RSJ
        score · Lucene fuzzy boost (1 − d/len(term)) expression the
        scan-based ``multi_match_bm25`` builds, best_fields MAX across
@@ -375,8 +390,8 @@ def multimatch_bm25_from_index(
     dictionary expansions, highest boost kept (Lucene's maxExpansions)
     — leave None for exact scan parity."""
     from .index import (
-        index_field_stats,
         field_stem as IX_field_stem,
+        index_stats,
         read_posting_meta,
         read_postings,
         read_termdict,
@@ -481,7 +496,10 @@ def multimatch_bm25_from_index(
     )
     joined = posts.join(F.broadcast(cand), ["field", "token"])
 
-    # 3. per-field BM25 with fuzzy boosts, best_fields combine
+    # 3. per-field BM25 with fuzzy boosts, best_fields combine; the
+    # stats of all fields come from one index_stats call (one dead
+    # correction collect when tombstones exist)
+    field_stats = index_stats(spark, path)
     per_field_scores = []
     for field in fields:
         pf = joined.filter(F.col("field") == field)
@@ -505,8 +523,9 @@ def multimatch_bm25_from_index(
                 for i in range(len(qterms))
             ]
         )
-        stats = dfs.crossJoin(
-            F.broadcast(index_field_stats(spark, path, field))
+        n_docs, sum_dl = field_stats.get(field, (0, 0))
+        stats = dfs.select(
+            "*", *_stats_literals(n_docs, sum_dl / n_docs if n_docs else None)
         )
         scored = per_doc.crossJoin(F.broadcast(stats))
         fs = F.lit(0.0)

@@ -486,24 +486,23 @@ def _respond(frame: DataFrame, scored: bool, body: dict, id_col: str) -> dict:
 def _token_candidates(spark, path: str, meta: dict, fields, tokens):
     """doc_ids holding ANY of ``tokens`` in ANY of ``fields`` — one
     bucket-pruned postings probe (partition filter from the index's
-    persisted n_buckets + pushed `token IN`), distinct'd. Empty token
-    set → typed-empty frame (an all-stopword match clause matches
-    nothing, exactly like the scan path's `lit(False)`)."""
+    persisted n_buckets + pushed `token IN`). A doc id repeats once per
+    matching (field, token) posting: every consumer semi-joins or
+    anti-joins the frame, which needs no distinct (a distinct would be
+    one more shuffle and Spark job per probe). Empty token set →
+    typed-empty frame (an all-stopword match clause matches nothing,
+    exactly like the scan path's `lit(False)`)."""
     from .index import read_postings, term_buckets
 
     posts = read_postings(spark, path)
     if not tokens:
         return posts.filter(F.lit(False)).select("doc_id")
     buckets = term_buckets(tokens, meta["n_buckets"])
-    return (
-        posts.filter(
-            F.col("field").isin(list(fields))
-            & F.col("tkb").isin(buckets)
-            & F.col("token").isin(sorted(tokens))
-        )
-        .select("doc_id")
-        .distinct()
-    )
+    return posts.filter(
+        F.col("field").isin(list(fields))
+        & F.col("tkb").isin(buckets)
+        & F.col("token").isin(sorted(tokens))
+    ).select("doc_id")
 
 
 def _stemmed_field(meta: dict, field: str) -> bool:
@@ -534,7 +533,9 @@ def _index_candidates(
     context unions (only when EVERY child is exactly servable — the
     minimum_should_match=1 contract); exactly-servable must_not
     children anti-join. A node with no positively-servable child
-    returns (None, node) — the caller falls back to the corpus scan."""
+    returns (None, node) — the caller falls back to the corpus scan.
+    A candidate frame may repeat a doc id (no distinct under the
+    semi-joins); search_frame_indexed semi-joins it into the docs."""
     if q is None or "match_all" in q:
         return None, q
     if "match" in q:
@@ -708,8 +709,10 @@ def _index_candidates(
                 if cc is None or rr is not None:
                     return None, q
                 union = cc if union is None else union.unionByName(cc)
-            u = union.distinct()
-            cands = u if cands is None else cands.join(u, "doc_id", "left_semi")
+            cands = (
+                union if cands is None
+                else cands.join(union, "doc_id", "left_semi")
+            )
         # should WITH a positive context is score-boost-only (the scan
         # path ignores it too) — dropped from the residual deliberately
         for c in as_list(b.get("must_not")):

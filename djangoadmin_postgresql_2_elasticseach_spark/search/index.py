@@ -249,20 +249,33 @@ N_STORE_BUCKETS = 16
 # The one on-disk format, persisted in the meta as ``layout_v``. Every
 # posting row carries its document's length ``dl`` (Lucene's
 # norms-with-postings posture: the length norm sits beside the
-# postings, read only for scored candidates), the per-field corpus
-# statistics live in the meta sidecar's ``field_stats`` (folded in at
-# each commit), and termdict/ is partitioned by (field, tlen), tlen =
-# min(len(token), TLEN_CAP), so fuzzy dictionary expansion (reachable
-# lengths = query-term length ± max_edits) reads only the candidate
-# length-band directories. A BM25 serve reads nothing but the pruned
-# posting buckets plus the sidecar.
+# postings, read only for scored candidates), and termdict/ is
+# partitioned by (field, tlen), tlen = min(len(token), TLEN_CAP), so
+# fuzzy dictionary expansion (reachable lengths = query-term length ±
+# max_edits) reads only the candidate length-band directories. A BM25
+# serve reads nothing but the pruned posting buckets plus the sidecar.
+#
+# The sidecar records:
+#
+# - the analyzer config: ``stem``, ``fields``, ``field_stem``,
+#   ``element_fields``;
+# - the layout: ``n_buckets``, ``n_store_buckets``, ``store_cols``,
+#   ``char_ngrams``, ``char_fields`` and, on a no-rename backend, the
+#   ``generation`` pointer;
+# - the artifact schemas: ``key_type`` (doc_id's Spark type) and
+#   ``store_schema`` (the stored columns' DDL). Every artifact read takes
+#   its exact schema from these two (_artifact_schema), so no read infers
+#   one from a parquet footer (a Spark job per read);
+# - the commit state: ``next_seq``, ``committed_seq``, ``dead_ranges``
+#   and the per-field corpus statistics ``field_stats`` (folded in at
+#   each commit).
 #
 # A sidecar in any other format (another layout_v, or no seq counter)
 # is rejected with a StaleIndexError before anything is read or written:
 # rebuild the index. There is no migration — the ES posture for old
 # on-disk formats (reindex), and cached indexes carry the version in
 # their cache key.
-LAYOUT_V = 3
+LAYOUT_V = 4
 
 
 class StaleIndexError(ValueError):
@@ -284,13 +297,24 @@ TLEN_CAP = 20
 # there is a driver/executor OOM, not a slowdown (r12 verdict #4)
 TOMBSTONE_BROADCAST_MAX_BYTES = 32 << 20
 
-POSTINGS_SCHEMA = (
-    "token string, doc_id long, tf long, positions array<int>, dl long, "
-    "seq long, field string, tkb int"
-)
-DOCLENS_SCHEMA = "doc_id long, dl long, seq long, field string"
-TERMDICT_SCHEMA = "token string, seq long, field string, tlen int"
-CHARDICT_SCHEMA = "gram string, token string, seq long, field string, gkb int"
+# Each artifact's (file columns, partition columns), in the order the
+# writers emit them; ``{key}`` is the sidecar's key_type and ``{store}``
+# its store_schema. A folded leaf holds the file columns only.
+_ARTIFACT_COLUMNS = {
+    "postings": (
+        "token string, doc_id {key}, tf bigint, positions array<int>, "
+        "seq bigint, dl bigint",
+        "field string, tkb int",
+    ),
+    "doclens": ("doc_id {key}, dl bigint, seq bigint", "field string"),
+    "termdict": ("token string, seq bigint", "field string, tlen int"),
+    "chardict": (
+        "gram string, token string, seq bigint", "field string, gkb int"
+    ),
+    "docstore": ("doc_id {key}, {store}seq bigint", "dsb int"),
+    "_tombstones": ("doc_id {key}, seq bigint", ""),
+}
+
 
 # character n-gram width for the opt-in chardict/ tier (PostgreSQL
 # pg_trgm's choice): wide enough to be selective, narrow enough that
@@ -622,7 +646,8 @@ def _check_format(path: str, meta: dict | None) -> None:
 def read_posting_meta(path: str) -> dict:
     """The index's build-time config: analyzer ({"stem", "fields"}),
     layout ("n_buckets" — serving computes its partition filters from
-    THIS, never a code constant), and the commit watermarks. A path
+    THIS, never a code constant), the artifact schemas ("key_type",
+    "store_schema"), and the commit watermarks. A path
     with no sidecar reads as an empty index (committed_seq 0); a
     sidecar in another format raises (_check_format). Keys a sidecar
     lacks (one a delete created before the first tick) fall back to
@@ -632,6 +657,8 @@ def read_posting_meta(path: str) -> dict:
     _check_format(path, meta)
     if meta is None:
         meta = {"layout_v": LAYOUT_V, "committed_seq": 0}
+    meta.setdefault("key_type", "bigint")
+    meta.setdefault("store_schema", None)
     meta.setdefault("stem", True)
     meta.setdefault("fields", ["text"])
     meta.setdefault("n_buckets", N_TOKEN_BUCKETS)
@@ -685,6 +712,43 @@ def _art(path: str, name: str, meta: dict | None) -> str:
     """Physical directory of one artifact (postings/, doclens/, ...)
     under the index's current generation root."""
     return os.path.join(_gen_root(path, meta), name)
+
+
+def _key_type(docs: DataFrame, id_col: str) -> str:
+    """The doc key's Spark type as the sidecar records it (``bigint``
+    for the test corpora's ids, ``string`` for the reference's UUIDs)."""
+    return docs.schema[id_col].dataType.simpleString()
+
+
+def _store_schema(docs: DataFrame, store_cols) -> str | None:
+    """DDL of the stored columns as ``docs`` carries them, in store
+    order — the docstore files' payload columns."""
+    if not store_cols:
+        return None
+    return ", ".join(
+        f"`{c}` {docs.schema[c].dataType.simpleString()}" for c in store_cols
+    )
+
+
+def _artifact_schema(meta: dict, name: str, leaf: bool = False) -> str:
+    """The exact schema of artifact ``name`` from the sidecar: file
+    columns then partition columns (Spark's order for a partitioned
+    read), or the file columns alone for one ``leaf`` directory."""
+    data, parts = _ARTIFACT_COLUMNS[name]
+    store = meta.get("store_schema")
+    data = data.format(key=meta["key_type"], store=f"{store}, " if store else "")
+    return data if leaf or not parts else f"{data}, {parts}"
+
+
+def _read_artifact(
+    spark: SparkSession, meta: dict, path: str, name: str, leaf: bool = False
+) -> DataFrame:
+    """Read artifact ``name`` at ``path`` (its directory, or one leaf of
+    it) with the schema the sidecar records — planning it runs no Spark
+    job. A missing directory reads as a typed empty frame (a scan of no
+    files), as does a directory with no data file."""
+    paths = [path] if os.path.isdir(path) else []
+    return spark.read.schema(_artifact_schema(meta, name, leaf)).parquet(*paths)
 
 
 def _reclaim_generations(path: str, keep: int) -> None:
@@ -1114,7 +1178,7 @@ def read_docstore(
     index-resident serving: `search_indexed(spark, read_docstore(...),
     body, path)` answers a DSL body with NO source-corpus read."""
     meta = read_posting_meta(path)
-    df = spark.read.parquet(_art(path, "docstore", meta))
+    df = _read_artifact(spark, meta, _art(path, "docstore", meta), "docstore")
     if live_only:
         df = _apply_tombstones(spark, path, df, meta=meta)
     if columns is not None:
@@ -1140,7 +1204,9 @@ def fetch_docs(
     instead (the bulk path: one shuffle-free broadcast join when the
     key side is small, AQE otherwise)."""
     meta = read_posting_meta(path)
-    store = spark.read.parquet(_art(path, "docstore", meta))
+    store = _read_artifact(
+        spark, meta, _art(path, "docstore", meta), "docstore"
+    )
     if isinstance(ids, DataFrame):
         key = ids.columns[0]
         df = store.join(
@@ -1176,9 +1242,7 @@ def _chardict_candidates(
     gkb)."""
     grams = fragment_grams(frag)
     cd = _visible(
-        _read_or_empty(
-            spark, _art(path, "chardict", meta), CHARDICT_SCHEMA
-        ),
+        _read_artifact(spark, meta, _art(path, "chardict", meta), "chardict"),
         meta,
     ).filter(
         (F.col("field") == field)
@@ -1455,6 +1519,8 @@ def build_posting_index(
                 "char_fields": list(char_fields) if char_fields else None,
                 "field_stem": dict(field_stem) if field_stem else None,
                 "layout_v": LAYOUT_V,
+                "key_type": _key_type(docs, id_col),
+                "store_schema": _store_schema(docs, store_cols),
                 "field_stats": None,
                 "next_seq": 1,
                 "committed_seq": 0,
@@ -1491,12 +1557,25 @@ def build_posting_index(
 
 
 def _validate_tick_config(
-    meta: dict, fields: tuple[str, ...], stem: bool, tokens_col, path: str
+    meta: dict,
+    docs: DataFrame,
+    id_col: str,
+    fields: tuple[str, ...],
+    stem: bool,
+    tokens_col,
+    path: str,
 ) -> None:
     """Reject a tick whose config disagrees with the index's persisted
     one BEFORE anything is written — an upsert that tombstones first
     and then fails validation would leave the batch's docs deleted
-    with no replacement (silently vanished)."""
+    with no replacement (silently vanished). That includes the doc
+    key's type: every read takes the recorded key_type as its schema."""
+    want_key, got_key = meta.get("key_type"), _key_type(docs, id_col)
+    if want_key is not None and got_key != want_key:
+        raise ValueError(
+            f"index at {path} keys docs by {want_key}; the tick's "
+            f"{id_col!r} is {got_key} — rebuild to change the key type"
+        )
     covered = set()
     if isinstance(tokens_col, str):
         covered = set(fields[:1])
@@ -1556,11 +1635,18 @@ def _tick_store_cols(
             f"index at {path} stores fields {cols}; the tick's batch "
             f"lacks {missing} — stored fields ride every tick"
         )
+    want, got = (meta or {}).get("store_schema"), _store_schema(docs, cols)
+    if want is not None and got != want:
+        raise ValueError(
+            f"index at {path} stores {want}; the tick's batch carries "
+            f"{got} — rebuild to change stored types"
+        )
     return tuple(cols)
 
 
 def _tick_defaults(
-    fields: tuple[str, ...], stem: bool, store_cols
+    docs: DataFrame, id_col: str, fields: tuple[str, ...], stem: bool,
+    store_cols,
 ) -> dict:
     """The meta document a tick would ESTABLISH on a fresh path —
     setdefault-merged by alloc_index_seqs, so an existing sidecar's
@@ -1574,6 +1660,8 @@ def _tick_defaults(
         "store_cols": list(store_cols) if store_cols else None,
         "n_store_buckets": N_STORE_BUCKETS,
         "layout_v": LAYOUT_V,
+        "key_type": _key_type(docs, id_col),
+        "store_schema": _store_schema(docs, store_cols),
         "element_fields": [],
     }
 
@@ -1605,16 +1693,22 @@ def append_posting_index(
     # fast-fail a visibly mismatched tick before taking the lease
     # (re-validated against the AUTHORITATIVE sidecar below)
     if meta is not None:
-        _validate_tick_config(meta, fields, stem, tokens_col, path)
+        _validate_tick_config(
+            meta, new_docs, id_col, fields, stem, tokens_col, path
+        )
     _tick_store_cols(meta, new_docs, path, requested=requested_store)
     seq = alloc_index_seqs(
-        mpath, 1, defaults=_tick_defaults(fields, stem, requested_store)
+        mpath, 1, defaults=_tick_defaults(
+            new_docs, id_col, fields, stem, requested_store
+        ),
     )
     with _release_lease_on_error(mpath), _lease_heartbeats(mpath):
         # config comes from the sidecar as it stands UNDER our claim —
         # the pre-alloc snapshot is a TOCTOU (see upsert_posting_index)
         meta = _load_meta(mpath) or {}
-        _validate_tick_config(meta, fields, stem, tokens_col, path)
+        _validate_tick_config(
+            meta, new_docs, id_col, fields, stem, tokens_col, path
+        )
         store_cols = _tick_store_cols(
             meta, new_docs, path, requested=requested_store
         )
@@ -1654,28 +1748,34 @@ def _apply_tombstones(
     *,
     meta: dict,
 ) -> DataFrame:
-    """Exclude dead rows: a row is live iff no tombstone exists for its
-    key, or it was written AFTER the key's latest tombstone (seq
-    comparison — an upsert's re-added rows carry a newer seq than the
-    delete that retired the old version). The tombstone set is bounded
-    by churn between compactions (compaction applies it physically;
-    the tiered pass folds it to one row per key), so the max-per-key
-    frame normally broadcasts — but the hint is THRESHOLD-GATED on the
-    tombstone files' on-disk size (TOMBSTONE_BROADCAST_MAX_BYTES): a
-    bulk re-index between compactions makes the set O(re-indexed
-    docs), and an unconditional broadcast there is an OOM, not a
-    slowdown; past the gate the liveness filter becomes a plain join
-    (AQE picks the strategy). ``meta`` applies the commit-watermark
-    visibility to BOTH sides. Shared by the posting index (key=doc_id)
-    and the IVF-PQ vector index (key=vec_id, operators/similarity.py)."""
+    """Exclude dead rows: a row is live iff no tombstone of its key has
+    a seq at or after its own (counter order — an upsert's re-added rows
+    carry a newer seq than the delete that retired the old version).
+    That is one anti-join on (key, seq <= tombstone seq): no per-key max
+    over the tombstones, so no shuffle and no Spark job of its own
+    before the join. The tombstone set is bounded by churn between
+    compactions (compaction applies it physically; the tiered pass
+    folds it to one row per key), so it normally broadcasts — but the
+    hint is THRESHOLD-GATED on the tombstone files' on-disk size
+    (TOMBSTONE_BROADCAST_MAX_BYTES): a bulk re-index between compactions
+    makes the set O(re-indexed docs), and an unconditional broadcast
+    there is an OOM, not a slowdown; past the gate the liveness filter
+    becomes a plain join (AQE picks the strategy). ``meta`` applies the
+    commit-watermark visibility to BOTH sides. Shared by the posting
+    index (key=doc_id) and the IVF-PQ vector index (key=vec_id,
+    operators/similarity.py). The tombstone files hold (key, seq), key
+    typed as in ``df``, so the read takes its schema from ``df`` and
+    plans no Spark job; the anti-join keeps ``df``'s columns in order,
+    so a folded leaf writes the columns a tick does."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
     tpath = _art(path, "_tombstones", meta)
     df = _visible(df, meta)
     if not os.path.exists(tpath):
         return df
-    tomb = (
-        _visible(spark.read.parquet(tpath), meta)
-        .groupBy(key)
-        .agg(F.max("seq").alias("_tomb_seq"))
+    schema = StructType([df.schema[key], StructField("seq", LongType())])
+    tomb = _visible(spark.read.schema(schema).parquet(tpath), meta).select(
+        F.col(key).alias("_tomb_key"), F.col("seq").alias("_tomb_seq")
     )
     tomb_bytes = sum(
         os.path.getsize(os.path.join(dp, f))
@@ -1685,20 +1785,22 @@ def _apply_tombstones(
     )
     if tomb_bytes <= TOMBSTONE_BROADCAST_MAX_BYTES:
         tomb = F.broadcast(tomb)
-    return (
-        df.join(tomb, key, "left")
-        .filter(
-            F.col("_tomb_seq").isNull() | (F.col("seq") > F.col("_tomb_seq"))
-        )
-        .drop("_tomb_seq")
+    return df.join(
+        tomb,
+        (df[key] == F.col("_tomb_key")) & (df["seq"] <= F.col("_tomb_seq")),
+        "left_anti",
     )
 
 
 def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Read a parquet dataset, degrading to a typed EMPTY frame when the
-    directory holds no data files (an all-empty-batch index writes only
-    _SUCCESS — there is no footer to infer from). The declared schema
-    uses the default long doc key; a real write always wins over it."""
+    """The IVF-PQ tier's reader (operators/similarity.py): read a
+    parquet dataset with an INFERRED schema (a footer-reading Spark job
+    per call), degrading to a typed EMPTY frame when the directory holds
+    no data files (an all-empty-batch index writes only _SUCCESS — there
+    is no footer to infer from). The declared schema uses the default
+    long key; a real write always wins over it. The posting index never
+    calls this: its artifacts read with the sidecar's recorded schema
+    (_read_artifact)."""
     from pyspark.errors.exceptions.captured import AnalysisException
 
     try:
@@ -1711,7 +1813,7 @@ def read_postings(
     spark: SparkSession, path: str, live_only: bool = True
 ) -> DataFrame:
     meta = read_posting_meta(path)
-    df = _read_or_empty(spark, _art(path, "postings", meta), POSTINGS_SCHEMA)
+    df = _read_artifact(spark, meta, _art(path, "postings", meta), "postings")
     if not live_only:
         return df
     return _apply_tombstones(spark, path, df, meta=meta)
@@ -1721,7 +1823,7 @@ def read_doclens(
     spark: SparkSession, path: str, live_only: bool = True
 ) -> DataFrame:
     meta = read_posting_meta(path)
-    df = _read_or_empty(spark, _art(path, "doclens", meta), DOCLENS_SCHEMA)
+    df = _read_artifact(spark, meta, _art(path, "doclens", meta), "doclens")
     if not live_only:
         return df
     return _apply_tombstones(spark, path, df, meta=meta)
@@ -1748,7 +1850,7 @@ def read_termdict(
     inside the shared capped band."""
     meta = read_posting_meta(path)
     td = _visible(
-        _read_or_empty(spark, _art(path, "termdict", meta), TERMDICT_SCHEMA),
+        _read_artifact(spark, meta, _art(path, "termdict", meta), "termdict"),
         meta,
     )
     if fields is not None:
@@ -1764,22 +1866,23 @@ def read_termdict(
     return td.select("field", "token").distinct()
 
 
-def index_stats(spark: SparkSession, path: str) -> DataFrame:
-    """LIVE corpus statistics per field: (field, n_docs, sum_dl) —
-    BM25's N and avgdl served WITHOUT aggregating the O(corpus) doclens
-    table per query (the r11 verdict's serving flag). Cost model:
+def index_stats(spark: SparkSession, path: str) -> dict:
+    """LIVE corpus statistics per field as driver values,
+    {field: (n_docs, sum_dl)} — BM25's N and avgdl served WITHOUT
+    aggregating the O(corpus) doclens table per query (the r11 verdict's
+    serving flag), and entering the score plan as literals. Cost model:
 
     - base: the meta sidecar's ``field_stats`` — a pure metadata read,
-      zero Spark scans;
+      no Spark job;
     - dead correction: only when tombstones exist — subtract the
-      tombstoned doc versions' doclens rows, found via a broadcast join
-      against the churn-bounded tombstone key set. Zero tombstones
-      (the steady post-compaction state) never touches doclens at all.
-      (A collected-keys IN-literal fast path was tried and REVERTED:
-      past a few hundred keys the literal bloats analysis/codegen —
-      measured +3.7 s on the streaming composite — and Spark does not
-      push large In lists to parquet row-group filters anyway, so the
-      broadcast join is the right shape at every churn size.)
+      tombstoned doc versions' doclens rows, found by a semi-join
+      against the broadcast, churn-bounded tombstone set and collected
+      as one per-field aggregate (one action). Zero tombstones (the
+      steady post-compaction state) never touches doclens at all. (A
+      collected-keys IN-literal fast path was tried and REVERTED: past
+      a few hundred keys the literal bloats analysis/codegen — measured
+      +3.7 s on the streaming composite — and Spark does not push large
+      In lists to parquet row-group filters anyway.)
 
     Invariant maintained by every writer: ``field_stats`` equals the
     per-field sums of ALL visible doclens rows on disk (live + dead) —
@@ -1787,51 +1890,48 @@ def index_stats(spark: SparkSession, path: str) -> DataFrame:
     doclens FILES without dropping dead rows; the full compaction drops
     dead rows and recomputes ``field_stats`` inside one atomic swap."""
     meta = read_posting_meta(path)
-    base = spark.createDataFrame(
-        [
-            (f, int(n), int(s))
-            for f, (n, s) in (meta["field_stats"] or {}).items()
-        ],
-        "field string, n_docs long, sum_dl long",
-    )
+    stats = {
+        f: (int(n), int(s)) for f, (n, s) in (meta["field_stats"] or {}).items()
+    }
     tpath = _art(path, "_tombstones", meta)
     if not os.path.exists(tpath):
-        return base
-    tomb = (
-        _visible(spark.read.parquet(tpath), meta)
-        .groupBy("doc_id")
-        .agg(F.max("seq").alias("_tomb_seq"))
-    )
+        return stats
+    tomb = _visible(
+        _read_artifact(spark, meta, tpath, "_tombstones"), meta
+    ).select(F.col("doc_id").alias("_tomb_id"), F.col("seq").alias("_tomb_seq"))
     lens = _visible(
-        _read_or_empty(spark, _art(path, "doclens", meta), DOCLENS_SCHEMA),
+        _read_artifact(spark, meta, _art(path, "doclens", meta), "doclens"),
         meta,
     )
-    dead = (
-        lens.join(F.broadcast(tomb), "doc_id")
-        .filter(F.col("seq") <= F.col("_tomb_seq"))
-        .groupBy("field")
-        .agg(F.count(F.lit(1)).alias("_dn"), F.sum("dl").alias("_dsum"))
+    # a doclens row is dead iff some tombstone of its doc is at or
+    # after its seq — a semi-join, so no per-key max over the tombstones
+    dead = lens.join(
+        F.broadcast(tomb),
+        (F.col("doc_id") == F.col("_tomb_id"))
+        & (F.col("seq") <= F.col("_tomb_seq")),
+        "left_semi",
     )
-    return base.join(dead, "field", "left").select(
-        "field",
-        (F.col("n_docs") - F.coalesce(F.col("_dn"), F.lit(0))).alias(
-            "n_docs"
-        ),
-        (F.col("sum_dl") - F.coalesce(F.col("_dsum"), F.lit(0))).alias(
-            "sum_dl"
-        ),
-    )
+    for r in (
+        dead.groupBy("field")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
+        .collect()
+    ):
+        if r["field"] in stats:
+            n, s = stats[r["field"]]
+            stats[r["field"]] = (n - int(r["n"]), s - int(r["s"]))
+    return stats
 
 
-def index_field_stats(spark: SparkSession, path: str, field: str) -> DataFrame:
-    """One-row (n_docs, avgdl) for a field — the broadcast side of the
-    BM25 serving score. try_divide: an EMPTY field (the meta stats keep
-    a (0, 0) row per declared field) yields NULL avgdl instead of an
-    ANSI divide-by-zero — the scorer's candidate set is empty there
+def index_field_stats(
+    spark: SparkSession, path: str, field: str
+) -> tuple[int, float | None]:
+    """(n_docs, avgdl) of one field as driver values — the N and avgdl
+    literals of the BM25 serving score. An EMPTY field (the meta stats
+    keep a (0, 0) entry per declared field) has avgdl None, the NULL
+    the old divide gave; the scorer's candidate set is empty there
     anyway."""
-    return index_stats(spark, path).filter(F.col("field") == field).select(
-        "n_docs", F.try_divide(F.col("sum_dl"), F.col("n_docs")).alias("avgdl")
-    )
+    n, s = index_stats(spark, path).get(field, (0, 0))
+    return n, (s / n if n else None)
 
 
 def delete_from_posting_index(
@@ -1844,15 +1944,23 @@ def delete_from_posting_index(
     (df / BM25 / phrase / stats) excludes rows at or below a doc's
     latest tombstone, and the compaction passes apply tombstones
     physically. O(|deletes|) — the index is never scanned. On a fresh
-    path the delete only creates the sidecar, stamped with LAYOUT_V (no
-    doc exists to retire), so the first tick after it writes the one
-    format and serves without the dead correction."""
+    path the delete only creates the sidecar, stamped with LAYOUT_V and
+    the key type (no doc exists to retire), so the first tick after it
+    writes the one format and serves without the dead correction. Keys
+    of another type than the index's key_type raise before any write:
+    the tombstone read takes the postings' key type as its schema."""
     mpath = _posting_meta_path(path)
-    _check_format(path, _load_meta(mpath))
-    seq = alloc_index_seqs(mpath, 1, defaults={"layout_v": LAYOUT_V})
-    # doc_id keeps the caller's key type (long testdata ids, the
-    # reference's UUID strings) — the liveness join must type-match the
-    # postings' doc_id
+    meta = _load_meta(mpath)
+    _check_format(path, meta)
+    key_type = _key_type(doc_ids, id_col)
+    if meta is not None and meta.get("key_type", key_type) != key_type:
+        raise ValueError(
+            f"index at {path} keys docs by {meta['key_type']}; the "
+            f"delete's {id_col!r} is {key_type}"
+        )
+    seq = alloc_index_seqs(
+        mpath, 1, defaults={"layout_v": LAYOUT_V, "key_type": key_type}
+    )
     with _release_lease_on_error(mpath), _lease_heartbeats(mpath):
         root = _gen_root(path, _load_meta(mpath))
         # with no postings yet there is no doc version to retire: a
@@ -1892,10 +2000,14 @@ def upsert_posting_index(
     # fast-fail a visibly mismatched tick before taking the lease
     # (re-validated against the AUTHORITATIVE sidecar below)
     if meta is not None:
-        _validate_tick_config(meta, fields, stem, tokens_col, path)
+        _validate_tick_config(
+            meta, new_docs, id_col, fields, stem, tokens_col, path
+        )
     _tick_store_cols(meta, new_docs, path, requested=requested_store)
     seq_t = alloc_index_seqs(
-        mpath, 2, defaults=_tick_defaults(fields, stem, requested_store)
+        mpath, 2, defaults=_tick_defaults(
+            new_docs, id_col, fields, stem, requested_store
+        ),
     )
     seq_a = seq_t + 1
     with _release_lease_on_error(mpath), _lease_heartbeats(mpath):
@@ -1908,7 +2020,9 @@ def upsert_posting_index(
         # versions of any doc in both batches) or drop the winner's
         # stored tier.
         meta = _load_meta(mpath) or {}
-        _validate_tick_config(meta, fields, stem, tokens_col, path)
+        _validate_tick_config(
+            meta, new_docs, id_col, fields, stem, tokens_col, path
+        )
         store_cols = _tick_store_cols(
             meta, new_docs, path, requested=requested_store
         )
@@ -2177,7 +2291,9 @@ def _compact_posting_locked(spark: SparkSession, path: str) -> None:
         # only (dead doc versions leave with their postings)
         ds = _apply_tombstones(
             spark, path,
-            spark.read.parquet(_art(path, "docstore", meta)),
+            _read_artifact(
+                spark, meta, _art(path, "docstore", meta), "docstore"
+            ),
             meta=meta,
         ).localCheckpoint(eager=True)
         ds.repartition("dsb").sortWithinPartitions(
@@ -2400,24 +2516,30 @@ def _compact_tiered_locked(
     # underscore dirs, so the staging tier is never served.
     _recover_folds(path)
 
+    def read_leaf(leaf: str, name: str) -> DataFrame:
+        # a leaf directory holds the file columns only — no partition
+        # column is read, so none is written back into the folded file
+        return _read_artifact(spark, meta, leaf, name, leaf=True)
+
     for leaf in _leaf_partition_dirs(os.path.join(path, "postings")):
         if len(_leaf_parquet_files(leaf)) <= max_files:
             continue
         live = _apply_tombstones(
-            spark, path, spark.read.parquet(leaf), meta=meta
+            spark, path, read_leaf(leaf, "postings"), meta=meta
         )
         _swap_leaf(live, leaf, path, ("token",))
     for leaf in _leaf_partition_dirs(os.path.join(path, "doclens")):
         if len(_leaf_parquet_files(leaf)) <= max_files:
             continue
         _swap_leaf(
-            _visible(spark.read.parquet(leaf), meta), leaf, path, ("doc_id",)
+            _visible(read_leaf(leaf, "doclens"), meta), leaf, path,
+            ("doc_id",),
         )
     for leaf in _leaf_partition_dirs(os.path.join(path, "termdict")):
         if len(_leaf_parquet_files(leaf)) <= max_files:
             continue
         folded = (
-            _visible(spark.read.parquet(leaf), meta)
+            _visible(read_leaf(leaf, "termdict"), meta)
             .select("token")
             .distinct()
             .select("token", F.lit(committed).cast("long").alias("seq"))
@@ -2427,7 +2549,7 @@ def _compact_tiered_locked(
         if len(_leaf_parquet_files(leaf)) <= max_files:
             continue
         folded = (
-            _visible(spark.read.parquet(leaf), meta)
+            _visible(read_leaf(leaf, "chardict"), meta)
             .select("gram", "token")
             .distinct()
             .select(
@@ -2440,13 +2562,13 @@ def _compact_tiered_locked(
         if len(_leaf_parquet_files(leaf)) <= max_files:
             continue
         live = _apply_tombstones(
-            spark, path, spark.read.parquet(leaf), meta=meta
+            spark, path, read_leaf(leaf, "docstore"), meta=meta
         )
         _swap_leaf(live, leaf, path, ("doc_id",))
     tpath = os.path.join(path, "_tombstones")
     if os.path.isdir(tpath) and len(_leaf_parquet_files(tpath)) > max_files:
         folded = (
-            _visible(spark.read.parquet(tpath), meta)
+            _visible(read_leaf(tpath, "_tombstones"), meta)
             .groupBy("doc_id")
             .agg(F.max("seq").alias("seq"))
         )

@@ -38,6 +38,28 @@ def duck():
     con.close()
 
 
+def spark_jobs(spark, fn):
+    """(Spark jobs ``fn`` ran, its result). Job ids are global and
+    monotonic, so the count is the gap between the last job of one
+    probe and the first job of the next (pool threads' jobs included;
+    a probe's count() may itself run more than one job)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def probe():
+        g = f"probe-{uuid.uuid4()}"
+        sc.setJobGroup(g, g)
+        spark.range(1).count()
+        sc.setJobGroup("other", "other")
+        return sorted(sc.statusTracker().getJobIdsForGroup(g))
+
+    before = probe()
+    out = fn()
+    after = probe()
+    return after[0] - before[-1] - 1, out
+
+
 def register_views(con, sf_dir: str) -> None:
     """Register the testdata parquet tables as DuckDB views, mirroring the
     driver harness."""

@@ -600,28 +600,21 @@ def test_match_response_spark_job_budget(spark, wide):
     rides it as an observation instead of a count() that re-runs the
     candidate probe, the semi-join and the docstore read. Pinned at the
     one-pass job count, so a second pass cannot creep back. Job ids are
-    global and monotonic, so the count is the id delta between two
-    probe jobs (the tick budget test in test_index_v2.py does the same)."""
-    import uuid
-
-    sc = spark.sparkContext
-
-    def probe_id():
-        g = f"probe-{uuid.uuid4()}"
-        sc.setJobGroup(g, g)
-        spark.range(1).count()
-        sc.setJobGroup("other", "other")
-        return max(sc.statusTracker().getJobIdsForGroup(g))
+    global and monotonic, so the count is the id gap between the last
+    job of one probe and the first job of the next (a probe's count()
+    runs two jobs)."""
+    from tests.conftest import spark_jobs
 
     docs, path = wide
     body = {"query": SHUFFLE, "size": 3}
-    n0 = probe_id()
-    resp = search_indexed(spark, docs, body, path, id_col="doc_id")
-    jobs = probe_id() - n0 - 1
+    jobs, resp = spark_jobs(
+        spark, lambda: search_indexed(spark, docs, body, path, id_col="doc_id")
+    )
     assert resp["hits"]["total"]["value"] == 20
-    # one page action: candidate probe, semi-join and docstore read
-    # (the two-pass response took 9)
-    assert jobs <= 5, f"match response job budget blown: {jobs}"
+    # one page action over the candidate probe, semi-join and docs read;
+    # no schema-inference job and no distinct under the semi-join (the
+    # two-pass response took 8, the one-pass one 4 before that)
+    assert jobs <= 2, f"match response job budget blown: {jobs}"
 
 
 def test_total_exact_over_sort_merge_join(spark, wide):

@@ -427,16 +427,14 @@ def test_combined_index_chardict_scoped_to_raw_field(
     import glob
 
     from djangoadmin_postgresql_2_elasticseach_spark.search.index import (
-        CHARDICT_SCHEMA,
         _art,
-        _read_or_empty,
+        _read_artifact,
         read_posting_meta,
     )
 
-    cd = _read_or_empty(
-        spark,
-        _art(combined_idx, "chardict", read_posting_meta(combined_idx)),
-        CHARDICT_SCHEMA,
+    meta = read_posting_meta(combined_idx)
+    cd = _read_artifact(
+        spark, meta, _art(combined_idx, "chardict", meta), "chardict"
     )
     fields = {r["field"] for r in cd.select("field").distinct().collect()}
     assert fields == {"text_raw"}

@@ -112,10 +112,7 @@ def test_torn_tick_is_invisible_and_redelivery_heals(spark, toks, tmp_path):
     delta = toks.filter((F.col("doc_id") >= 30) & (F.col("doc_id") < 60))
     build_posting_index(first, path, tokens_col="tokens")
     pre_df = _df_map(spark, path)
-    pre_stats = {
-        r["field"]: (r["n_docs"], r["sum_dl"])
-        for r in index_stats(spark, path).collect()
-    }
+    pre_stats = index_stats(spark, path)
 
     # simulated crash: seq allocated, postings (only) written, NO commit
     mpath = IX._posting_meta_path(path)
@@ -128,10 +125,7 @@ def test_torn_tick_is_invisible_and_redelivery_heals(spark, toks, tmp_path):
     ).parquet(os.path.join(path, "postings"))
 
     assert _df_map(spark, path) == pre_df
-    assert {
-        r["field"]: (r["n_docs"], r["sum_dl"])
-        for r in index_stats(spark, path).collect()
-    } == pre_stats
+    assert index_stats(spark, path) == pre_stats
 
     # re-delivery: the normal append (fresh seq) — orphan rows fenced
     append_posting_index(delta, path, tokens_col="tokens")
@@ -353,10 +347,7 @@ def test_index_stats_tracks_live_corpus(spark, toks, tmp_path):
     )
 
     def check():
-        got = {
-            r["field"]: (r["n_docs"], r["sum_dl"])
-            for r in index_stats(spark, path).collect()
-        }
+        got = index_stats(spark, path)
         want = {
             r["field"]: (r["n_docs"], r["sum_dl"])
             for r in read_doclens(spark, path)
@@ -498,10 +489,7 @@ def test_tiered_compaction_folds_hot_partition_only(spark, tmp_path):
     before_tombs = leaf_files("_tombstones")
     assert len(before_hot) > 4 and len(before_cold) == 1
     before_vals = _df_map(spark, path)
-    before_stats = {
-        r["field"]: (r["n_docs"], r["sum_dl"])
-        for r in index_stats(spark, path).collect()
-    }
+    before_stats = index_stats(spark, path)
 
     compact_posting_index_tiered(spark, path, max_files=4)
 
@@ -512,10 +500,7 @@ def test_tiered_compaction_folds_hot_partition_only(spark, tmp_path):
     assert len(after_tombs) < len(before_tombs)
     assert os.path.exists(os.path.join(path, "_tombstones"))  # NOT cleared
     assert _df_map(spark, path) == before_vals
-    assert {
-        r["field"]: (r["n_docs"], r["sum_dl"])
-        for r in index_stats(spark, path).collect()
-    } == before_stats
+    assert index_stats(spark, path) == before_stats
     # phrase serving still healthy post-fold
     assert {
         r["doc_id"]
@@ -578,7 +563,7 @@ def test_multifield_per_field_serving(spark, docs, tmp_path):
     )
     path = str(tmp_path / "idx")
     build_posting_index(sliver, path, fields=("text", "source"))
-    st = {r["field"] for r in index_stats(spark, path).collect()}
+    st = set(index_stats(spark, path))
     assert st == {"text", "source"}
     got = [
         (r["doc_id"], r["score"])

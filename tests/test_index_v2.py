@@ -175,7 +175,7 @@ def _stale(meta: dict, case: str) -> dict:
         for k in ("next_seq", "committed_seq", "dead_ranges"):
             meta.pop(k)
     else:
-        meta["layout_v"] = {"v1": 1, "v2": 2}[case]
+        meta["layout_v"] = {"v1": 1, "v2": 2, "v3": 3}[case]
     return meta
 
 
@@ -188,7 +188,9 @@ def _files(path):
     )
 
 
-@pytest.mark.parametrize("case", ["v1", "v2", "no_layout", "no_counter"])
+@pytest.mark.parametrize(
+    "case", ["v1", "v2", "v3", "no_layout", "no_counter"]
+)
 def test_stale_sidecar_is_rejected_before_any_write(
     spark, toks, tmp_path, case
 ):
