@@ -1927,9 +1927,8 @@ def index_field_stats(
 ) -> tuple[int, float | None]:
     """(n_docs, avgdl) of one field as driver values — the N and avgdl
     literals of the BM25 serving score. An EMPTY field (the meta stats
-    keep a (0, 0) entry per declared field) has avgdl None, the NULL
-    the old divide gave; the scorer's candidate set is empty there
-    anyway."""
+    keep a (0, 0) entry per declared field) has avgdl None, a NULL
+    literal; the scorer's candidate set is empty there anyway."""
     n, s = index_stats(spark, path).get(field, (0, 0))
     return n, (s / n if n else None)
 
